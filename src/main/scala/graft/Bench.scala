@@ -258,7 +258,8 @@ object Bench {
       catch { case _: Throwable => () }
     }
     println(s"GRAFT_BENCH_JSON\t$extended")
-    spark.stop()
-    println(contract)
+    // A failing stop must not cost the run its result line.
+    try spark.stop()
+    finally println(contract)
   }
 }

@@ -93,17 +93,21 @@ final class BatchChunker(
     * (lib/DBIx/BatchChunker.pm:1279-1281). */
   def chunkDf(c: Chunk): DataFrame = df.filter(betweenFilter(c.start, c.end))
 
-  private def aggToBigInt(d: DataFrame, f: Column => Column): Option[BigInt] = {
-    // Resolve the id column against THIS DataFrame's schema: a rangeDf may
-    // carry the key under a different (string-vs-numeric) type than df.
+  /** The id column of `d` in the numeric form [[betweenFilter]] compares.
+    * Resolved against THIS DataFrame's schema: a rangeDf or countDf may
+    * carry the key under a different (string-vs-numeric) type than df. */
+  private def idNumeric(d: DataFrame): Column = {
     val fld = d.schema.find(_.name.equalsIgnoreCase(idColumn)).getOrElse(
       throw new IllegalArgumentException(
         s"id column '$idColumn' not found in range/count schema ${d.schema.fieldNames.mkString(", ")}"))
-    val idNumeric = fld.dataType match {
+    fld.dataType match {
       case StringType => col(idColumn).cast(DecimalType(38, 0))
       case _          => col(idColumn)
     }
-    val row = d.agg(f(idNumeric).cast(DecimalType(38, 0))).head()
+  }
+
+  private def aggToBigInt(d: DataFrame, f: Column => Column): Option[BigInt] = {
+    val row = d.agg(f(idNumeric(d)).cast(DecimalType(38, 0))).head()
     if (row.isNullAt(0)) None else Some(BigInt(row.getDecimal(0).toBigInteger))
   }
 
@@ -116,18 +120,35 @@ final class BatchChunker(
 
   private val probeTarget: DataFrame = countDf.getOrElse(df)
 
-  /** Per-chunk COUNT probe. Note each probe is its own Spark job with fresh
-    * literals (fresh codegen); at high chunk counts prefer disabling the
-    * probe (`enableCountProbe = false`, analogous to the reference running
-    * without `count_stmt`/`count_rs`) and sizing chunks from a single-pass
-    * density histogram instead. */
+  /** Live COUNT probe. With the probe enabled, the engine answers most
+    * probes from a [[CountWindow]] instead (see [[windowLoader]]) and runs
+    * this one only to confirm a block is empty before skipping it, or for a
+    * probe no window can cover. */
   private val probe: Option[(BigInt, BigInt) => BigInt] =
     if (enableCountProbe) Some((s, e) => BigInt(probeTarget.filter(betweenFilter(s, e)).count()))
     else None
 
+  /** One grouped scan per window: the row count of each distinct id in
+    * `[lo, hi]`, lowest `cap` ids first. A window spans a few chunk widths,
+    * so sizing costs a fraction of one Spark job per chunk where the live
+    * probe cost one job per bisection rung. */
+  private val windowLoader: CountWindow.Loader = (lo, hi, cap) => {
+    val k = idNumeric(probeTarget).as("k")
+    probeTarget.filter(betweenFilter(lo, hi)).groupBy(k).count()
+      .orderBy(col("k")).limit(cap).collect().toSeq
+      .map { r =>
+        val id = r.get(0) match {
+          case d: java.math.BigDecimal => BigInt(d.toBigInteger)
+          case n: java.lang.Number     => BigInt(n.longValue)
+        }
+        (id, r.getLong(1))
+      }
+  }
+
   /** The underlying engine; exposed so callers can set min/max manually and
     * skip range discovery, like the reference allows (t/dbh.t:249-281). */
-  val engine = new ChunkEngine(cfg, Some(source), probe, clock)
+  val engine = new ChunkEngine(cfg, Some(source), probe, clock,
+    countWindow = probe.map(_ => windowLoader))
 
   /** N1: discover `[minId, maxId]` via a min/max aggregate — one Spark job
     * over the id column only (column-pruned scan). */
@@ -198,7 +219,7 @@ final class BatchChunker(
 
   /** N8 DIY mode: bare range callback, no data touched by the engine. Note
     * DIY runtimes include count-probe time, matching the reference
-    * (lib/DBIx/BatchChunker.pm:1376-1380). */
+    * (lib/DBIx/BatchChunker.pm:1376-1380), but not count-window loads. */
   def foreachRange(f: (BigInt, BigInt) => Unit): ExecutionReport =
     engine.execute(c => f(c.start, c.end), markTimerOnDispatch = false)
 
@@ -264,7 +285,13 @@ final class BatchChunker(
           }
         }
       }
-      scala.concurrent.Future.sequence(futures).foreach(_ => outcome.trySuccess(()))
+      locally {
+        // Completion callbacks run inline, not on `pool`: after a poisoned
+        // run the finally below shuts the pool down while queued futures
+        // still complete, and a callback sent there would be rejected.
+        implicit val ec: scala.concurrent.ExecutionContext = scala.concurrent.ExecutionContext.parasitic
+        scala.concurrent.Future.sequence(futures).foreach(_ => outcome.trySuccess(()))
+      }
       scala.concurrent.Await.result(outcome.future, scala.concurrent.duration.Duration.Inf)
       planned
     } finally pool.shutdown()

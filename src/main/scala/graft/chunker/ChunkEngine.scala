@@ -36,6 +36,13 @@ trait RangeSource {
   * (lib/DBIx/BatchChunker.pm:1256-1289); None disables density-based resizing
   * exactly like a missing `count_stmt`/`count_rs`.
   *
+  * `countWindow`, when set, answers the probe from a [[CountWindow]]: one
+  * grouped scan loads exact per-id counts for a few chunk widths ahead, and
+  * later rungs and chunks are looked up in it until a probe falls outside.
+  * Only a live `countProbe` may skip a block: a window that says 0 is
+  * confirmed live first, so rows that appeared since the load are never
+  * skipped. Load time counts as planning, not as COUNT or chunk runtime.
+  *
   * @param markTimerOnDispatch the reference resets the chunk timer when the
   *   real work starts for statement/resultset dispatch, but NOT for DIY
   *   dispatch (lib/DBIx/BatchChunker.pm:1304-1380) — so DIY runtimes include
@@ -45,10 +52,15 @@ final class ChunkEngine(
     val cfg: ChunkerConfig,
     source: Option[RangeSource] = None,
     countProbe: Option[(BigInt, BigInt) => BigInt] = None,
-    clock: Clock = SystemClock
+    clock: Clock = SystemClock,
+    countWindow: Option[CountWindow.Loader] = None
 ) {
   var minId: Option[BigInt] = None
   var maxId: Option[BigInt] = None
+
+  /** Most ids one window load may return. */
+  private[chunker] var windowCap: Int = CountWindow.Cap
+  private var window: Option[CountWindow] = None
 
   /** Exposed for introspection mid-run, like the reference's `loop_state`
     * attribute (lib/DBIx/BatchChunker.pm:467-483). */
@@ -100,6 +112,7 @@ final class ChunkEngine(
 
     val ls = new LoopState(cfg.chunkSize, clock)
     loopState = Some(ls)
+    window = None // a window from an earlier run may be stale
     var finished = true
     var done = false
 
@@ -198,13 +211,45 @@ final class ChunkEngine(
       markTimerOnDispatch: Boolean,
       outcomes: ArrayBuffer[ChunkOutcome]
   ): Boolean = {
-    countProbe.foreach { probe =>
-      ls.chunkCount = Some(withRetry(() => probe(ls.start.get, ls.end), ls, markTimer = false))
-    }
+    countProbe.foreach(probe => ls.chunkCount = Some(probeCount(ls, probe)))
     if (!chunkCountChecker(ls, outcomes)) return false
     withRetry(() => { process(Chunk(ls.start.get, ls.end)); BigInt(0) }, ls, markTimerOnDispatch)
     true
   }
+
+  /** The block's row count: from the window when one covers it, else live.
+    * A window's 0 is confirmed live whenever it would skip the block; a live
+    * answer that disagrees drops the stale window. */
+  private def probeCount(ls: LoopState, probe: (BigInt, BigInt) => BigInt): BigInt = {
+    val (s, e) = (ls.start.get, ls.end)
+    def live(): BigInt = withRetry(() => probe(s, e), ls, markTimer = false)
+    windowFor(ls, s, e) match {
+      case Some(w) =>
+        val n = w.count(s, e)
+        if (n != 0 || cfg.minChunkPercent <= 0) n
+        else {
+          val c = live()
+          if (c != 0) window = None
+          c
+        }
+      case None => live()
+    }
+  }
+
+  /** A window covering `[s, e]`, loading one starting at `s` if the current
+    * one does not. The load's time is moved out of the chunk timer, the way
+    * the max re-check's is: it is planning for several chunks ahead. */
+  private def windowFor(ls: LoopState, s: BigInt, e: BigInt): Option[CountWindow] =
+    countWindow.flatMap { load =>
+      val hi = CountWindow.plannedHi(s, e, maxId.get)
+      if (!window.exists(_.covers(s, e)) && hi >= e) {
+        val t0 = clock.now()
+        val rows = withRetry(() => load(s, hi, windowCap), ls, markTimer = false)
+        window = Some(CountWindow(s, hi, windowCap, rows))
+        ls.chunkTimer += clock.now() - t0
+      }
+      window.filter(_.covers(s, e))
+    }
 
   private def withRetry[A](f: () => A, ls: LoopState, markTimer: Boolean): A =
     retrying("Chunk") {

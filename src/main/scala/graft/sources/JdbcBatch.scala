@@ -625,7 +625,12 @@ object JdbcBatch {
                   ChunkOutcome(chunk, None, action, (System.nanoTime() - t0) / 1e9, cfg.chunkSize))
               }
             }
-            scala.concurrent.Future.sequence(futures).foreach(_ => outcome.trySuccess(()))
+            locally {
+              // Completion callbacks run inline, not on `pool`: the finally
+              // below shuts it down while queued futures still complete.
+              implicit val ec: scala.concurrent.ExecutionContext = scala.concurrent.ExecutionContext.parasitic
+              scala.concurrent.Future.sequence(futures).foreach(_ => outcome.trySuccess(()))
+            }
             scala.concurrent.Await.result(outcome.future, scala.concurrent.duration.Duration.Inf)
           } finally {
             // On the poison path Await throws while sibling chunks are

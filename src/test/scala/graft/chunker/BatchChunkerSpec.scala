@@ -18,6 +18,15 @@ class BatchChunkerSpec extends AnyFunSuite {
   private val quiet: String => Unit = _ => ()
   private def cfg0 = ChunkerConfig(sleep = 0, targetTime = 0, log = quiet)
 
+  private def captureStderr(body: => Unit): String = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val old = System.err
+    System.setErr(new java.io.PrintStream(buf, true))
+    try body
+    finally System.setErr(old)
+    buf.toString
+  }
+
   private def gappyDf = {
     // track-style gappy ids incl. id 0 (t/lib/CDTest.pm:289-338)
     val ids = (0L to 20L) ++ (35L to 40L) ++ (100L to 120L)
@@ -264,6 +273,101 @@ class BatchChunkerSpec extends AnyFunSuite {
     assert(boom.getMessage.contains("not transient"))
     assert(attemptsOnPoisoned.get() == 1,
       s"non-retryable failure retried ${attemptsOnPoisoned.get()} times in the parallel path")
+  }
+
+  test("a poisoned parallel run prints no RejectedExecutionException traces") {
+    val table = (1L to 400L).toDF("id")
+    val bc = new BatchChunker(table, "id",
+      cfg0.copy(chunkSize = 10, minChunkPercent = 0, retryAttempts = 1), enableCountProbe = false)
+    bc.calculateRanges()
+    val err = captureStderr {
+      intercept[RuntimeException] {
+        bc.foreachChunkPar(parallelism = 2) { (chunk, _) =>
+          if (chunk.start == BigInt(1)) throw new RuntimeException("poisoned chunk")
+          Thread.sleep(20)
+        }
+      }
+      Thread.sleep(500) // queued futures complete after the pool is shut down
+    }
+    assert(!err.contains("RejectedExecutionException"), err)
+  }
+
+  test("count probes cost at most half a Spark job per processed chunk over gaps, sparse and dense runs") {
+    // Cycles of: an empty gap ten chunk widths long, ~1 row per 5 ids,
+    // 1 row per id, 8 rows per id, 1 row per id (chunk size 100 rows).
+    val rnd = new scala.util.Random(11)
+    val ids = ArrayBuffer.empty[Long]
+    var id = 0L
+    for (_ <- 1 to 4; (len, perId) <- Seq((1000, 0.0), (500, 0.2), (150, 1.0), (100, 8.0), (150, 1.0)); _ <- 1 to len) {
+      id += 1
+      val n = perId.toInt + (if (rnd.nextDouble() < perId - perId.toInt) 1 else 0)
+      for (_ <- 1 to n) ids += id
+    }
+    val dir = java.nio.file.Files.createTempDirectory("probe-jobs").toString
+    ids.toSeq.toDF("id").write.mode("overwrite").parquet(dir)
+    val df = spark.read.parquet(dir)
+    val bc = new BatchChunker(df, "id", cfg0.copy(chunkSize = 100, minChunkPercent = 0.5))
+    bc.calculateRanges()
+
+    val sc = spark.sparkContext
+    val probeJobs = new java.util.concurrent.atomic.AtomicInteger()
+    val barrier = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("bcspec.phase")).foreach {
+          case "probe"   => probeJobs.incrementAndGet()
+          case "barrier" => barrier.countDown()
+          case _         => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    var rows = 0L
+    val rpt =
+      try {
+        sc.setLocalProperty("bcspec.phase", "probe")
+        bc.foreachChunk { chunk =>
+          sc.setLocalProperty("bcspec.phase", "work")
+          rows += chunk.count()
+          sc.setLocalProperty("bcspec.phase", "probe")
+        }
+      } finally {
+        // The bus delivers events in order: once this job is seen, so is every probe.
+        sc.setLocalProperty("bcspec.phase", "barrier")
+        spark.range(1).count()
+        sc.setLocalProperty("bcspec.phase", null)
+        assert(barrier.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        sc.removeSparkListener(listener)
+      }
+    val expected = df.count()
+    assert(rows == expected)
+    assert(rpt.processed.flatMap(_.count).sum == BigInt(expected))
+    assert(rpt.skipped.nonEmpty)
+    assert(probeJobs.get() <= 0.5 * rpt.processed.size,
+      s"${probeJobs.get()} probe-side jobs for ${rpt.processed.size} processed chunks")
+  }
+
+  test("a block the window saw empty is counted live before it is skipped (Derby-backed source)") {
+    val url = "jdbc:derby:memory:bcspec_live;create=true"
+    def exec(sql: String): Unit = {
+      val c = java.sql.DriverManager.getConnection(url)
+      try c.createStatement().executeUpdate(sql) finally c.close()
+    }
+    exec("CREATE TABLE live_ids (id BIGINT NOT NULL)")
+    val initial = (1L to 20L) ++ (100L to 120L)
+    initial.foreach(i => exec(s"INSERT INTO live_ids VALUES ($i)"))
+    val df = spark.read.jdbc(url, "live_ids", new java.util.Properties)
+    val bc = new BatchChunker(df, "id", cfg0.copy(chunkSize = 10, minChunkPercent = 0.5))
+    bc.calculateRanges()
+    val seen = ArrayBuffer.empty[Long]
+    val inserted = 25L to 30L
+    val rpt = bc.foreachChunk { chunk =>
+      // The first chunk's window spans 1..40; fill part of its empty 21..40
+      // after the window was loaded, ahead of the walk.
+      if (seen.isEmpty) inserted.foreach(i => exec(s"INSERT INTO live_ids VALUES ($i)"))
+      seen ++= chunk.collect().map(_.getLong(0))
+    }
+    assert(inserted.forall(seen.contains), s"rows inserted into the gap were skipped: ${rpt.outcomes}")
+    assert(seen.sorted == (initial ++ inserted).sorted)
   }
 
   test("distributed per-row dispatch processes all rows on executors") {

@@ -346,6 +346,38 @@ class ChunkEngineSpec extends AnyFunSuite {
     assert(rpt.processed.last.chunk.end == 100)
   }
 
+  test("window loads are planning: no COUNT-too-slow shrink, not in a DIY chunk's runtime") {
+    val clock = new ManualClock
+    val ids = (BigInt(1) to BigInt(100)).toVector
+    var loads = 0
+    val slowLoader: CountWindow.Loader = (lo, hi, cap) => {
+      clock.advance(10.0) // far past targetTime * 1.05
+      loads += 1
+      ids.filter(id => id >= lo && id <= hi).map(id => (id, 1L)).take(cap)
+    }
+    val lines = ArrayBuffer.empty[String]
+    val eng = new ChunkEngine(
+      ChunkerConfig(chunkSize = 10, targetTime = 1.0, sleep = 0, minChunkPercent = 0.5, log = lines += _),
+      Some(src(ids)), Some(probe(ids)), clock, countWindow = Some(slowLoader))
+    eng.calculateRanges()
+    val rpt = eng.execute(_ => clock.advance(0.2), markTimerOnDispatch = false)
+    assert(loads > 1)
+    assert(!lines.exists(_.contains("COUNT statement was too slow")), lines.mkString("\n"))
+    assert(rpt.processed.map(_.chunk.width).sum == 100)
+    assert(rpt.processed.forall(o => math.abs(o.runtime - 0.2) < 1e-9), rpt.processed.map(_.runtime))
+  }
+
+  test("CountWindow counts exactly and ends a truncated load at its last id") {
+    val rows = Seq(BigInt(3) -> 2L, BigInt(5) -> 1L, BigInt(9) -> 4L)
+    val w = CountWindow(BigInt(2), BigInt(20), 10, rows)
+    assert(w.hi == 20 && w.count(2, 20) == 7 && w.count(4, 8) == 1 && w.count(6, 8) == 0)
+    assert(w.count(3, 3) == 2 && w.count(9, 9) == 4 && w.count(10, 20) == 0)
+    val cut = CountWindow(BigInt(2), BigInt(20), 3, rows)
+    assert(cut.hi == 9 && cut.covers(2, 9) && !cut.covers(2, 10))
+    assert(CountWindow.plannedHi(10, 19, maxId = 1000) == 49)
+    assert(CountWindow.plannedHi(10, 19, maxId = 30) == 30)
+  }
+
   test("resizing gives up after 10 checks and processes as-is (lib/DBIx/BatchChunker.pm:1549-1553)") {
     // a lying probe that keeps the ladder oscillating: too-many when wide,
     // too-few when narrow — never inside the band

@@ -53,6 +53,42 @@ object ChunkPlanProps extends Properties("ChunkPlan") {
         Prop(rpt.skipped.forall(_.count.contains(BigInt(0)))) :| "skips were empty"
     }
 
+  private def liveProbe(ids: Vector[BigInt], calls: Array[Int]): (BigInt, BigInt) => BigInt =
+    (s, e) => { calls(0) += 1; BigInt(ids.count(id => id >= s && id <= e)) }
+
+  private def loader(ids: Vector[BigInt]): CountWindow.Loader = (lo, hi, cap) =>
+    ids.filter(id => id >= lo && id <= hi).groupBy(identity).toSeq
+      .map { case (id, rows) => (id, rows.size.toLong) }.sortBy(_._1).take(cap)
+
+  /** One adaptive walk; returns its report and the number of live probes. */
+  private def walk(ids: Vector[BigInt], chunkSize: Int, minChunkPercent: Double,
+      windowCap: Option[Int]): (ExecutionReport, Int) = {
+    val calls = Array(0)
+    val eng = new ChunkEngine(
+      ChunkerConfig(chunkSize = chunkSize, targetTime = 0, sleep = 0,
+        minChunkPercent = minChunkPercent, log = quiet),
+      Some(mkSource(ids)), Some(liveProbe(ids, calls)), new ManualClock,
+      countWindow = windowCap.map(_ => loader(ids)))
+    windowCap.foreach(eng.windowCap = _)
+    eng.calculateRanges()
+    (eng.execute(_ => ()), calls(0))
+  }
+
+  private val genMinChunkPercent: Gen[Double] = Gen.oneOf(0.0, 0.5)
+
+  // A cap of 3 ids truncates most windows and sends probes past them live.
+  property("window-indexed counts give the same plan as live probes, full or truncated windows") =
+    forAll(genIds, genChunkSize, genMinChunkPercent) { (ids: Vector[BigInt], chunkSize: Int, pct: Double) =>
+      val live = walk(ids, chunkSize, pct, None)._1.outcomes
+      Seq(CountWindow.Cap, 3).forall(cap => walk(ids, chunkSize, pct, Some(cap))._1.outcomes == live)
+    }
+
+  property("with a window, the only live probes confirm the skips") =
+    forAll(genIds, genChunkSize) { (ids: Vector[BigInt], chunkSize: Int) =>
+      val (rpt, calls) = walk(ids, chunkSize, 0.5, Some(CountWindow.Cap))
+      Prop(calls == rpt.skipped.size) :| s"$calls live probes for ${rpt.skipped.size} skips"
+    }
+
   property("crash + persisted resume tiles [min,max] exactly once, for any crash point") =
     forAll(genIds, genChunkSize, Gen.choose(0, 20)) {
       (ids: Vector[BigInt], chunkSize: Int, crashAfter: Int) =>

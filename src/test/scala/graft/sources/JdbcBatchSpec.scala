@@ -617,6 +617,25 @@ class JdbcBatchSpec extends AnyFunSuite {
       "every row bumped exactly once — the lost-ack retry must not double-apply")
   }
 
+  test("executeChunkedDmlPar: a crashed run prints no RejectedExecutionException traces") {
+    seeded
+    (1L to 400L).map(i => (i, i)).toDF("id", "val")
+      .write.mode("overwrite").jdbc(url, "par_err", new java.util.Properties)
+    val buf = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(buf, true))
+    try {
+      val boom = intercept[RuntimeException] {
+        JdbcBatch.executeChunkedDmlPar(url,
+          """UPDATE par_err SET "val" = "val" + 1 WHERE "id" BETWEEN {start} AND {end}""",
+          "id", "par_err", cfg(10), parallelism = 2, commitLog = "par_err_log", runId = "par-err-1",
+          inTxn = (chunk, _) => if (chunk.start == BigInt(1)) throw new RuntimeException("crash"))
+      }
+      assert(boom.getMessage == "crash")
+    } finally System.setErr(stderr)
+    assert(!buf.toString.contains("RejectedExecutionException"), buf.toString)
+  }
+
   test("empty table: readChunked returns an empty frame without failing") {
     val empty = Seq.empty[(Long, String)].toDF("id", "name")
     empty.write.mode("overwrite").jdbc(url, "chunk_empty", new java.util.Properties)

@@ -12,6 +12,6 @@ SF="$1"
 OUT="$2"
 VDIR="${3:-/tmp/graft_full_tally}"
 cd "$(dirname "$0")/.."
-SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.Verify $SF $VDIR" >"$VDIR.log" 2>&1
+SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" sbt -batch "runMain graft.Verify $SF $VDIR" >"$VDIR.log" 2>&1
 python3 tools/oracle_check.py "$VDIR" "$SF" >"$OUT" 2>&1
 tail -1 "$OUT"
