@@ -247,15 +247,22 @@ object Bench {
       .mkString("{", ",", "}")
     val contract = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs3,"errors":$errs,"sf":"$sfDir"}"""
     // File mirrors: the env-provided path (pid-suffixed /tmp fallback so
-    // concurrent runs don't clobber each other) AND the fixed repo-root
-    // bench_out.json the r18 verdict asked for — both recoverable however
-    // badly a log pipeline mangles stdout.
+    // concurrent runs don't clobber each other) AND bench_out.json in the
+    // working directory the JVM was started in (`user.dir`, the repo root
+    // under sbt) — both recoverable however badly a log pipeline mangles
+    // stdout. Each is written to a pid-named temp file beside it and moved
+    // over it atomically, so overlapping runs leave one whole file (the
+    // last to finish), never a torn or interleaved one.
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val pid = ProcessHandle.current().pid()
     for (out <- Seq(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-          s"/tmp/graft_bench_${ProcessHandle.current().pid()}.json"),
-        "bench_out.json")) {
-      try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), extended + "\n")
-      catch { case _: Throwable => () }
+        Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"/tmp/graft_bench_$pid.json")),
+        Paths.get(System.getProperty("user.dir"), "bench_out.json")).map(_.toAbsolutePath)) {
+      val tmp = out.resolveSibling(s".${out.getFileName}.$pid.tmp")
+      try {
+        Files.writeString(tmp, extended + "\n")
+        Files.move(tmp, out, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      } catch { case _: Throwable => try Files.deleteIfExists(tmp) catch { case _: Throwable => () } }
     }
     println(s"GRAFT_BENCH_JSON\t$extended")
     // A failing stop must not cost the run its result line.

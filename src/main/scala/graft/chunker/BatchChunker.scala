@@ -145,10 +145,12 @@ final class BatchChunker(
       }
   }
 
+  private def newEngine(c: ChunkerConfig) =
+    new ChunkEngine(c, Some(source), probe, clock, countWindow = probe.map(_ => windowLoader))
+
   /** The underlying engine; exposed so callers can set min/max manually and
     * skip range discovery, like the reference allows (t/dbh.t:249-281). */
-  val engine = new ChunkEngine(cfg, Some(source), probe, clock,
-    countWindow = probe.map(_ => windowLoader))
+  val engine = newEngine(cfg)
 
   /** N1: discover `[minId, maxId]` via a min/max aggregate — one Spark job
     * over the id column only (column-pruned scan). */
@@ -166,14 +168,15 @@ final class BatchChunker(
     * (the discovered min is kept when it is already past the resume
     * point, e.g. on a keyspace whose tail was deleted). Returns true when
     * a resume point was applied. */
-  def resumeFrom(stateDir: String): Boolean =
-    ResumeState.read(stateDir) match {
-      case Some(prevEnd) =>
-        val next = prevEnd + 1
-        if (engine.minId.forall(_ < next)) engine.minId = Some(next)
-        true
-      case None => false
-    }
+  def resumeFrom(stateDir: String): Boolean = {
+    val prevEnd = ResumeState.read(stateDir)
+    prevEnd.foreach(resumeAfter)
+    prevEnd.isDefined
+  }
+
+  /** Advance `minId` to `prevEnd + 1`, unless it is already past it. */
+  private[chunker] def resumeAfter(prevEnd: BigInt): Unit =
+    if (engine.minId.forall(_ <= prevEnd)) engine.minId = Some(prevEnd + 1)
 
   /** N4/N6: bulk callback per chunk. The callback receives the lazily
     * filtered chunk DataFrame and chooses its own action (write, count,
@@ -224,8 +227,14 @@ final class BatchChunker(
     engine.execute(c => f(c.start, c.end), markTimerOnDispatch = false)
 
   /** Dry run: drive the full adaptive loop (count probes, resizing, skips)
-    * without dispatching any work — the chunk plan as data. */
-  def planChunks(): ExecutionReport = engine.execute(_ => ())
+    * without dispatching any work — the chunk plan as data. No resume
+    * point moves, in memory or in `stateDir`: nothing has run. */
+  def planChunks(): ExecutionReport = {
+    val planner = newEngine(cfg.withoutStateFile)
+    planner.minId = engine.minId
+    planner.maxId = engine.maxId
+    planner.execute(_ => ())
+  }
 
   /** Parallel fan-out over a FIXED-SIZE chunk plan: plan all chunks first
     * (driver-side, no jobs), then run `parallelism` chunk actions
@@ -246,8 +255,8 @@ final class BatchChunker(
       "foreachChunkPar needs the fixed-size configuration (targetTime = 0, minChunkPercent <= 0): " +
         "adaptive resizing is sequential by nature")
     val chunks = Vector.newBuilder[Chunk]
-    // plan with no dispatch; the fixed config makes this driver-side math only
-    val planner = new ChunkEngine(cfg, None, None, clock)
+    // plan with no dispatch (driver-side math only); a plan is no progress
+    val planner = new ChunkEngine(cfg.withoutStateFile, None, None, clock)
     planner.minId = engine.minId
     planner.maxId = engine.maxId
     planner.execute(c => chunks += c, markTimerOnDispatch = false)

@@ -1,5 +1,6 @@
 package graft.chunker
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Chunked DML over immutable storage — the reference's bread-and-butter
@@ -16,8 +17,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    never observes a half-written chunk (dot-dirs are invisible to the
   *    glob AND to Spark's file-index, which skips `.`/`_` paths), a
   *    failed/retried chunk re-stages and re-renames idempotently, and a
-  *    crashed run resumes from the engine's resume point without
-  *    double-writing earlier chunks.
+  *    crashed run resumes after its last committed chunk without
+  *    double-writing earlier chunks (see [[rewriteWithRange]]).
   *
   * The semantic difference from a real transaction (readers can observe a
   * half-rewritten TABLE across chunk boundaries, never within one chunk) is
@@ -51,7 +52,15 @@ object ChunkedRewrite {
     * which is what makes per-chunk upsert exactly-once). `rangeDf` extends
     * range discovery past the target's own keyspace (e.g. to cover insert
     * keys that don't exist in the target yet), mirroring
-    * BatchChunker's `min_stmt`/`max_stmt` parity. */
+    * BatchChunker's `min_stmt`/`max_stmt` parity.
+    *
+    * With `cfg.stateDir` set (the opt-in to resume), a restarted run reads
+    * its resume point from `outDir` itself: it starts one id past the
+    * largest end among the committed `chunk_<start>_<end>` directories,
+    * and first deletes every uncommitted `chunk_*` or `.staging_chunk_*`
+    * directory a crash left behind. Nothing is written under `stateDir`.
+    * Blocks skipped as empty after the last committed chunk are probed
+    * again on restart. To start over, use a fresh or emptied `outDir`. */
   def rewriteWithRange(
       df: DataFrame,
       idColumn: String,
@@ -60,22 +69,24 @@ object ChunkedRewrite {
       countProbe: Boolean = true,
       rangeDf: Option[DataFrame] = None
   )(transform: (Chunk, DataFrame) => DataFrame): ExecutionReport = {
-    val bc = new BatchChunker(df, idColumn, cfg, enableCountProbe = countProbe, rangeDf = rangeDf)
+    val bc = new BatchChunker(df, idColumn, cfg.withoutStateFile,
+      enableCountProbe = countProbe, rangeDf = rangeDf)
     bc.calculateRanges()
-    // Crash-restart composition: with a configured stateDir the engine
-    // persists its resume point per committed chunk, and a restarted run
-    // starts at the first unprocessed id — no key is ever written by two
-    // committed chunk dirs (the persisted point is one id stricter than
-    // the reference's in-memory min_id = prev_end write-back; see
-    // ResumeState's scaladoc for why).
-    cfg.stateDir.foreach(bc.resumeFrom)
-    val hconf = df.sparkSession.sparkContext.hadoopConfiguration
+    val root = new Path(outDir)
+    val fs = root.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    // The markers are the commit record, written with each chunk's commit,
+    // so resuming from them is exact even when sizing diverges on restart.
+    if (cfg.stateDir.isDefined && fs.exists(root)) {
+      val (committed, uncommitted) = listChunks(fs, root)
+      uncommitted.foreach { p =>
+        if (!fs.delete(p, true)) throw new java.io.IOException(s"could not delete uncommitted $p")
+      }
+      val ends = committed.map(_.getName).collect { case ChunkName(_, end) => BigInt(end) }
+      if (ends.nonEmpty) bc.resumeAfter(ends.max)
+    }
     bc.foreachChunkWithRange { (chunk, chunkDf) =>
-      val staging = new org.apache.hadoop.fs.Path(
-        s"$outDir/.staging_chunk_${chunk.start}_${chunk.end}")
-      val finalDir = new org.apache.hadoop.fs.Path(
-        s"$outDir/chunk_${chunk.start}_${chunk.end}")
-      val fs = finalDir.getFileSystem(hconf)
+      val staging = new Path(root, s".staging_chunk_${chunk.start}_${chunk.end}")
+      val finalDir = new Path(root, s"chunk_${chunk.start}_${chunk.end}")
       transform(chunk, chunkDf).write.mode("overwrite").parquet(staging.toString)
       // Commit = swap the fully-written staging dir in. On HDFS/local the
       // rename is atomic and the only non-atomic instant is between delete
@@ -91,8 +102,20 @@ object ChunkedRewrite {
       if (fs.exists(finalDir)) fs.delete(finalDir, true)
       if (!fs.rename(staging, finalDir))
         throw new java.io.IOException(s"commit rename failed for $finalDir")
-      fs.create(new org.apache.hadoop.fs.Path(finalDir, CommitMarker), true).close()
+      fs.create(new Path(finalDir, CommitMarker), true).close()
     }
+  }
+
+  private val ChunkName = """chunk_(-?\d+)_(-?\d+)""".r
+
+  /** One listing of `root`: the committed `chunk_*` directories (marker
+    * present), and the ones a crash left uncommitted — an unmarked
+    * `chunk_*` or a `.staging_chunk_*`. */
+  private def listChunks(fs: FileSystem, root: Path): (Seq[Path], Seq[Path]) = {
+    val dirs = fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath)
+    val (chunks, others) = dirs.partition(_.getName.startsWith("chunk_"))
+    val (committed, torn) = chunks.partition(p => fs.exists(new Path(p, CommitMarker)))
+    (committed, torn ++ others.filter(_.getName.startsWith(".staging_chunk_")))
   }
 
   /** Name of the per-chunk commit marker, written strictly after every data
@@ -130,7 +153,7 @@ object ChunkedRewrite {
     * caller's result or exception, but it must not be silent either. */
   def deleteQuietly(spark: SparkSession, dir: String): Unit =
     try {
-      val p = new org.apache.hadoop.fs.Path(dir)
+      val p = new Path(dir)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(p) && !fs.delete(p, true))
         System.err.println(s"[graft] cleanup failed to delete $dir")
@@ -157,13 +180,9 @@ object ChunkedRewrite {
     * copy+delete "rename" has no marker (it is written last) and is
     * skipped. */
   def readBackCommitted(spark: SparkSession, outDir: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(outDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("chunk_"))
-      .filter(st => fs.exists(new org.apache.hadoop.fs.Path(st.getPath, CommitMarker)))
-      .map(_.getPath.toString)
+    val root = new Path(outDir)
+    val committed = listChunks(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)._1
     if (committed.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(committed.toIndexedSeq: _*)
+    else spark.read.parquet(committed.map(_.toString): _*)
   }
 }

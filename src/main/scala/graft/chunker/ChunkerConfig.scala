@@ -49,13 +49,14 @@ final case class Chunk(start: BigInt, end: BigInt) {
   *                         failures are known-transient
   * @param verbose          per-chunk status lines (lib/DBIx/BatchChunker.pm:414-424)
   * @param log              sink for status/progress lines
-  * @param stateDir         when set, the engine persists its resume point
-  *                         there after every committed chunk (see
-  *                         [[ResumeState]]) — the cross-process form of the
-  *                         reference's `min_id = prev_end` write-back
-  *                         (lib/DBIx/BatchChunker.pm:1228). ChunkedRewrite
-  *                         auto-resumes from it; elsewhere call
-  *                         [[BatchChunker.resumeFrom]] explicitly
+  * @param stateDir         opt-in to cross-process resume, the persisted form
+  *                         of the reference's `min_id = prev_end` write-back
+  *                         (lib/DBIx/BatchChunker.pm:1228). ChunkedRewrite and
+  *                         journaled `JdbcBatch.executeChunkedDml` resume from
+  *                         their own commit records and write nothing here;
+  *                         elsewhere the engine persists its resume point here
+  *                         per committed chunk ([[ResumeState]]), and
+  *                         [[BatchChunker.resumeFrom]] reads it back
   */
 final case class ChunkerConfig(
     chunkSize: BigInt = BigInt(1),
@@ -83,6 +84,11 @@ final case class ChunkerConfig(
   if (targetTime == 0 && chunkSize == BigInt(1))
     log("WARNING: target_time is disabled but chunk_size is still at its default of 1; " +
       "this results in one chunk per id, which is probably not what you want")
+
+  /** This config without a state file, for runs whose resume point lives
+    * elsewhere (a commit record) or must not move (a planning pass). */
+  private[graft] def withoutStateFile: ChunkerConfig =
+    if (stateDir.isEmpty) this else copy(stateDir = None)
 }
 
 /** What happened to one chunk — collected into an [[ExecutionReport]].

@@ -2,29 +2,29 @@ package graft.chunker
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-/** Cross-process resume point for the chunk loop.
+/** Cross-process resume point for chunk loops with no commit record of
+  * their own (the `foreachChunk*` family, `runSql`, and
+  * `JdbcBatch.executeChunkedDml` without a `commitLog`).
   *
   * The reference makes an interrupted run resumable by writing
   * `min_id = prev_end` back onto the object (lib/DBIx/BatchChunker.pm:1228)
   * — which survives as long as the Perl process does. A 100 TB migration
   * restarts processes, so this persists the same resume point as a tiny
   * state file, updated atomically after every committed chunk and read back
-  * by [[BatchChunker.resumeFrom]] (or automatically by
-  * [[ChunkedRewrite]] when `ChunkerConfig.stateDir` is set).
+  * by [[BatchChunker.resumeFrom]]. ChunkedRewrite and the journaled
+  * JdbcBatch path resume from their own commit records instead and never
+  * write this file.
   *
   * Semantics, deliberately one id stricter than the in-memory write-back:
   * the in-memory `minId = prevEnd` keeps verbatim reference parity (the
   * reference's restarted loop re-touches the boundary id — harmless for
   * idempotent SQL DML). The persisted file instead records `prevEnd` = the
   * last PROCESSED id, and resume starts at `prevEnd + 1`, so a restarted
-  * copy-on-write run composes exactly-once with ChunkedRewrite's
-  * range-keyed chunk commits: no key is ever written by two committed
-  * chunks.
+  * run never hands the boundary id to the callback twice.
   *
   * The file is one JSON line; the write is staged + `ATOMIC_MOVE`d so a
-  * crash mid-update leaves the previous resume point intact (same
-  * discipline as ChunkedRewrite's staged renames). Driver-side control
-  * plane: one tiny local/DFS file per run, written once per chunk.
+  * crash mid-update leaves the previous resume point intact. Driver-side
+  * control plane: one tiny local/DFS file per run, written once per chunk.
   */
 object ResumeState {
 

@@ -96,7 +96,7 @@ object JdbcBatch {
       cfg: ChunkerConfig,
       props: Properties = new Properties
   ): DataFrame = {
-    val engine = new ChunkEngine(cfg, None, None)
+    val engine = new ChunkEngine(cfg.withoutStateFile, None, None) // a plan is no progress
     discoverRange(url, table, idColumn, props).foreach { case (mn, mx) =>
       engine.minId = Some(mn); engine.maxId = Some(mx)
     }
@@ -169,14 +169,14 @@ object JdbcBatch {
     *                 restarted PROCESS does not — chunkSize resets, so
     *                 boundaries shift and an overlap would miss the probe),
     *                 so on startup the loop additionally resumes from
-    *                 `max(stateDir resume point, MAX(chunk_end) in the
-    *                 journal) + 1`. Chunks in this sequential path are
-    *                 strictly increasing, and the journal row commits
-    *                 atomically WITH the chunk's work — unlike the state
-    *                 file, written after the ack — so MAX(chunk_end) is the
-    *                 true high-water mark even when the process dies between
-    *                 COMMIT and the state-file write. The table is created
-    *                 if missing.
+    *                 `MAX(chunk_end) in the journal + 1`. Chunks in this
+    *                 sequential path are strictly increasing, and the
+    *                 journal row commits atomically WITH the chunk's work,
+    *                 so MAX(chunk_end) is the true high-water mark. With a
+    *                 journal it is the only resume source: `stateDir` is
+    *                 neither read nor written (blocks skipped as empty after
+    *                 the last journaled chunk are probed again on restart).
+    *                 The table is created if missing.
     * @param runId   logical-run scope for the journal — REQUIRED (non-empty)
     *                 whenever `commitLog` is set, enforced with a fail-fast
     *                 `require`: with an implicit shared default, a second
@@ -281,44 +281,38 @@ object JdbcBatch {
             rs.next(); BigInt(rs.getLong(1))
           }
         }
-      val engine = new ChunkEngine(cfg, Some(source), probe)
+      // With a journal, the journal is the resume record; the state file
+      // would only add a write per chunk.
+      val engine = new ChunkEngine(if (commitLog.isDefined) cfg.withoutStateFile else cfg,
+        Some(source), probe)
       // Startup probes run under the SAME retry budget as the chunks:
       // ProbeConnection only survives one rebuild-and-reissue per call, so
       // without this a DB that flaps twice at startup kills a run whose
       // per-chunk path would have survived cfg.retryAttempts attempts.
       engine.retrying("Startup range probe")(engine.calculateRanges())
-      // Cross-process resume in the reference's own deployment shape: with
-      // a configured stateDir the engine persists prevEnd per committed
-      // chunk, and a restarted run re-enters after the last COMMITTED
-      // transaction — nothing is re-executed, nothing is skipped.
-      for (dir <- cfg.stateDir; pe <- ResumeState.read(dir)) {
-        val next = pe + 1
-        if (engine.minId.forall(_ < next)) engine.minId = Some(next)
+      // Cross-process resume in the reference's own deployment shape: a
+      // restarted run re-enters after the last COMMITTED transaction —
+      // nothing is re-executed, nothing is skipped. With a journal the
+      // point is its MAX(chunk_end) for this run: the journal row commits
+      // atomically WITH the chunk's work, and chunks in this sequential
+      // path are strictly increasing, so it is exact even when a restart
+      // re-plans from the RESET chunkSize under runtime targeting (shifted
+      // boundaries would miss the exact-match probe above). Without one it
+      // is the state file the engine writes after each commit.
+      val resumePoint = commitLog match {
+        case Some(tbl) =>
+          engine.retrying("Journal high-water-mark probe")(probeConn { c =>
+            val st = c.createStatement()
+            try {
+              val rs = st.executeQuery(
+                s"""SELECT MAX("chunk_end") FROM $tbl WHERE "run_id" = $runIdSql""")
+              if (!rs.next()) None
+              else Option(rs.getBigDecimal(1)).map(d => BigInt(d.toBigInteger))
+            } finally st.close()
+          })
+        case None => cfg.stateDir.flatMap(ResumeState.read)
       }
-      // Journal-derived resume: the state file is written AFTER the commit
-      // ack, so a process can die with chunk (s, e) durable but the file
-      // stale (or never written). Under runtime targeting a restart then
-      // re-plans from the RESET chunkSize, and the shifted boundaries miss
-      // the exact-match probe above — re-applying the template over the
-      // overlap. The journal row, by contrast, commits atomically WITH the
-      // chunk's work, and chunks in this sequential path are strictly
-      // increasing, so MAX(chunk_end) for this run is the true high-water
-      // mark. Resume from whichever of the two is further along.
-      commitLog.foreach { tbl =>
-        val hwm = engine.retrying("Journal high-water-mark probe")(probeConn { c =>
-          val st = c.createStatement()
-          try {
-            val rs = st.executeQuery(
-              s"""SELECT MAX("chunk_end") FROM $tbl WHERE "run_id" = $runIdSql""")
-            if (!rs.next()) None
-            else Option(rs.getBigDecimal(1)).map(d => BigInt(d.toBigInteger))
-          } finally st.close()
-        })
-        for (m <- hwm) {
-          val next = m + 1
-          if (engine.minId.forall(_ < next)) engine.minId = Some(next)
-        }
-      }
+      for (pe <- resumePoint if engine.minId.forall(_ <= pe)) engine.minId = Some(pe + 1)
       // Chunks whose body was skipped because their journal row was already
       // committed (lost-ack retry or a prior process): the engine records
       // them as dispatched, so they are re-labelled in the report below —
@@ -491,7 +485,7 @@ object JdbcBatch {
           ExecutionReport(Vector.empty, finishedRange = true, None, None)
         case Some((mn, mx)) =>
           // Deterministic fixed-size plan over the PINNED range.
-          val planner = new ChunkEngine(cfg, None, None)
+          val planner = new ChunkEngine(cfg.withoutStateFile, None, None)
           planner.minId = Some(mn); planner.maxId = Some(mx)
           val chunkBuf = Vector.newBuilder[Chunk]
           planner.execute(c => chunkBuf += c, markTimerOnDispatch = false)

@@ -292,6 +292,27 @@ class BatchChunkerSpec extends AnyFunSuite {
     assert(!err.contains("RejectedExecutionException"), err)
   }
 
+  test("planning passes persist no resume point: planChunks and a poisoned foreachChunkPar") {
+    val stateDir = java.nio.file.Files.createTempDirectory("plan-nostate").toString
+    val table = (1L to 100L).toDF("id")
+    val bc = new BatchChunker(table, "id",
+      cfg0.copy(chunkSize = 10, minChunkPercent = 0, retryAttempts = 1, stateDir = Some(stateDir)),
+      enableCountProbe = false)
+    bc.calculateRanges()
+    assert(bc.planChunks().processed.size == 10)
+    assert(ResumeState.read(stateDir).isEmpty, "a dry run persisted a resume point")
+    assert(bc.minId.contains(BigInt(1)), "a dry run moved the in-memory resume point")
+    // Before the fix the planner wrote maxId here, so a resumeFrom after this
+    // crash would have skipped every chunk the poisoned run never processed.
+    intercept[RuntimeException] {
+      bc.foreachChunkPar(parallelism = 1) { (chunk, _) =>
+        if (chunk.start == BigInt(21)) throw new RuntimeException("poisoned chunk 3")
+      }
+    }
+    assert(ResumeState.read(stateDir).isEmpty, "the parallel planner persisted a resume point")
+    assert(!bc.resumeFrom(stateDir))
+  }
+
   test("count probes cost at most half a Spark job per processed chunk over gaps, sparse and dense runs") {
     // Cycles of: an empty gap ten chunk widths long, ~1 row per 5 ids,
     // 1 row per id, 8 rows per id, 1 row per id (chunk size 100 rows).

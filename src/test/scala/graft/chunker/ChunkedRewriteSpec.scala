@@ -3,6 +3,7 @@ package graft.chunker
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
+import scala.collection.mutable.ArrayBuffer
 
 /** Chunked copy-on-write DML: the reference's UPDATE/DELETE workload shape
   * over immutable parquet, with idempotent per-chunk retry.
@@ -205,5 +206,99 @@ class ChunkedRewriteSpec extends AnyFunSuite {
     val committed = ChunkedRewrite.readBackCommitted(spark, s"$dir/out")
     assert(committed.count() == 100)
     assert(committed.select(max(col("id"))).head().getLong(0) == 100)
+  }
+
+  /** count, distinct ids and sum(v) of a readback, in one job. */
+  private def tally(df: org.apache.spark.sql.DataFrame): (Long, Long, Long) = {
+    val r = df.agg(count(lit(1)), countDistinct(col("id")), sum(col("v"))).head()
+    (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2))
+  }
+
+  test("resume deletes uncommitted leftovers: an unmarked chunk with other bounds is not read twice") {
+    val dir = java.nio.file.Files.createTempDirectory("cow-leftover").toString
+    (1L to 80L).map(i => (i, 0L)).toDF("id", "v").write.parquet(s"$dir/src")
+    val table = spark.read.parquet(s"$dir/src")
+    val cfg = cfg0.copy(chunkSize = 10, retryAttempts = 1, stateDir = Some(s"$dir/state"))
+    val out = s"$dir/out"
+    def bump(c: org.apache.spark.sql.DataFrame) = c.withColumn("v", col("v") + 1)
+    intercept[RuntimeException] {
+      ChunkedRewrite.rewriteWithRange(table, "id", cfg, out, countProbe = false) { (chunk, c) =>
+        if (chunk.start == BigInt(41)) throw new RuntimeException("killed")
+        bump(c)
+      }
+    }
+    // What a kill between rename and marker leaves when the killed plan had
+    // other bounds than the restarted one, plus a half-written staging dir.
+    table.filter(col("id").between(41L, 60L)).transform(bump).write.parquet(s"$out/chunk_41_60")
+    new java.io.File(s"$out/.staging_chunk_41_60").mkdirs()
+    val starts = ArrayBuffer.empty[BigInt]
+    ChunkedRewrite.rewriteWithRange(table, "id", cfg, out, countProbe = false) { (chunk, c) =>
+      starts += chunk.start
+      bump(c)
+    }
+    assert(starts.head == BigInt(41))
+    assert(tally(ChunkedRewrite.readBack(spark, out)) == ((80L, 80L, 80L)))
+    assert(tally(ChunkedRewrite.readBackCommitted(spark, out)) == ((80L, 80L, 80L)))
+    val names = new java.io.File(out).list().toSet
+    assert(!names("chunk_41_60") && !names(".staging_chunk_41_60"), s"leftovers survived: $names")
+  }
+
+  test("exactly-once under a crash at every chunk boundary while chunkSize grows") {
+    // The staged-rename twin of JdbcBatchSpec's journal-resume test. Each
+    // restart re-plans from the reset chunkSize, so its bounds differ from
+    // the grown chunks run 1 committed; resuming from anything but the
+    // commit markers writes the overlap twice.
+    val dir = java.nio.file.Files.createTempDirectory("cow-every").toString
+    val n = 45L
+    (1L to n).map(i => (i, 0L)).toDF("id", "v").write.parquet(s"$dir/src")
+    val table = spark.read.parquet(s"$dir/src")
+    // targetTime > 0 with chunks far faster than it: after 5 timings the
+    // engine doubles chunkSize (3 -> 6), so 5 chunks of 3 then 5 of 6.
+    val cfg = ChunkerConfig(chunkSize = 3, targetTime = 30, sleep = 0, minChunkPercent = 0,
+      retryAttempts = 1, log = quiet)
+    def bump(c: org.apache.spark.sql.DataFrame) = c.withColumn("v", col("v") + 1)
+    def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit =
+      java.nio.file.Files.walk(from).forEach { p =>
+        java.nio.file.Files.copy(p, to.resolve(from.relativize(p).toString))
+      }
+    var k = 1
+    var finished = false
+    while (!finished) {
+      val base = s"$dir/k$k"
+      val committed = ArrayBuffer.empty[Chunk]
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/asLeft"))
+      try {
+        ChunkedRewrite.rewriteWithRange(table, "id", cfg.copy(stateDir = Some(s"$base/state")),
+          s"$base/asLeft", countProbe = false) { (chunk, c) =>
+          if (committed.size == k - 1) throw new RuntimeException(s"killed at chunk $k")
+          committed += chunk
+          bump(c)
+        }
+        finished = true // k is past the last chunk: run 1 completed
+        assert(committed.size == 10 && committed.map(_.width).distinct.sorted == Seq(3, 6).map(BigInt(_)),
+          s"chunk size never grew the way the test assumes: $committed")
+      } catch { case e: RuntimeException if e.getMessage == s"killed at chunk $k" => () }
+      // The rename-then-kill state: the last committed chunk lost its marker.
+      copyTree(java.nio.file.Paths.get(s"$base/asLeft"), java.nio.file.Paths.get(s"$base/unmarked"))
+      committed.lastOption.foreach { c =>
+        java.nio.file.Files.delete(java.nio.file.Paths.get(
+          s"$base/unmarked/chunk_${c.start}_${c.end}", ChunkedRewrite.CommitMarker))
+      }
+      for (state <- Seq("asLeft", "unmarked")) {
+        val out = s"$base/$state"
+        val stateDir = s"$base/state_$state"
+        // A resume file one chunk behind the commits: what dying between
+        // a chunk's marker and a state-file write would leave. It must not
+        // matter, since the markers are the resume record.
+        if (committed.size >= 2) ResumeState.write(stateDir, committed(committed.size - 2).end)
+        ChunkedRewrite.rewriteWithRange(table, "id", cfg.copy(stateDir = Some(stateDir)), out,
+          countProbe = false)((_, c) => bump(c))
+        val label = s"crash at chunk $k, $state"
+        assert(tally(ChunkedRewrite.readBackCommitted(spark, out)) == ((n, n, n)), label)
+        assert(tally(ChunkedRewrite.readBack(spark, out)) == ((n, n, n)), label)
+      }
+      k += 1
+    }
+    assert(k == 12) // crashes at chunks 1..10, then the run that completed
   }
 }

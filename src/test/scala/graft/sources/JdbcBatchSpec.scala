@@ -298,6 +298,27 @@ class JdbcBatchSpec extends AnyFunSuite {
     assert(back.filter(col("done") =!= 1).count() == 0)
   }
 
+  test("the journal is the resume record: journaled and planning paths write no state file") {
+    seeded
+    val stateDir = java.nio.file.Files.createTempDirectory("jdbc-nostate").toString
+    val cfgS = cfg(25).copy(stateDir = Some(stateDir))
+    (1L to 100L).map(i => (i, 0L)).toDF("id", "done")
+      .write.mode("overwrite").jdbc(url, "txn_nostate", new java.util.Properties)
+    val dml = """UPDATE txn_nostate SET "done" = "done" + 1 WHERE "id" BETWEEN {start} AND {end}"""
+    val rpt = JdbcBatch.executeChunkedDml(url, dml, "id", "txn_nostate", cfgS,
+      commitLog = Some("txn_nostate_j"), runId = "nostate-run")
+    assert(rpt.processed.size == 4)
+    assert(graft.chunker.ResumeState.read(stateDir).isEmpty, "journaled run wrote a state file")
+    // The chunk planners of the parallel DML and the chunked read are no
+    // progress either.
+    JdbcBatch.executeChunkedDmlPar(url, dml, "id", "txn_nostate", cfgS, parallelism = 2,
+      commitLog = "txn_nostate_j", runId = "nostate-par")
+    assert(JdbcBatch.readChunked(spark, url, "txn_nostate", "id", cfgS).count() == 100)
+    assert(graft.chunker.ResumeState.read(stateDir).isEmpty, "a planner wrote a state file")
+    assert(spark.read.jdbc(url, "txn_nostate", new java.util.Properties)
+      .filter(col("done") === 2).count() == 100)
+  }
+
   test("executeChunkedDml: run_id scopes the journal — a second logical run applies, a resumed one skips") {
     seeded
     val src = (1L to 60L).map(i => (i, 0L)).toDF("id", "done")
