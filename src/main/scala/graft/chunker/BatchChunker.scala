@@ -213,12 +213,7 @@ final class BatchChunker(
     * SELECT consumed by `action`, or INSERT/MERGE DML against a catalog
     * table). */
   def runSql(spark: SparkSession, template: String, action: DataFrame => Unit = _ => ()): ExecutionReport =
-    engine.execute { c =>
-      val sql = template
-        .replace("{start}", c.start.toString)
-        .replace("{end}", c.end.toString)
-      action(spark.sql(sql))
-    }
+    engine.execute(c => action(spark.sql(c.fill(template))))
 
   /** N8 DIY mode: bare range callback, no data touched by the engine. Note
     * DIY runtimes include count-probe time, matching the reference
@@ -228,17 +223,18 @@ final class BatchChunker(
 
   /** Dry run: drive the full adaptive loop (count probes, resizing, skips)
     * without dispatching any work — the chunk plan as data. No resume
-    * point moves, in memory or in `stateDir`: nothing has run. */
+    * point moves, in memory or in `stateDir`: nothing has run. Nothing
+    * sleeps either: `cfg.sleep` paces work, and a plan does none. */
   def planChunks(): ExecutionReport = {
-    val planner = newEngine(cfg.withoutStateFile)
+    val planner = newEngine(cfg.copy(stateDir = None, sleep = 0))
     planner.minId = engine.minId
     planner.maxId = engine.maxId
     planner.execute(_ => ())
   }
 
   /** Parallel fan-out over a FIXED-SIZE chunk plan: plan all chunks first
-    * (driver-side, no jobs), then run `parallelism` chunk actions
-    * concurrently on the scheduler.
+    * ([[Chunk.fixedPlan]], driver-side math, no jobs and no `cfg.sleep`),
+    * then run `parallelism` chunk actions concurrently on the scheduler.
     *
     * The reference's loop is deliberately sequential because its chunks hold
     * DB locks (SURVEY.md §7.4); for read-only Spark workloads (chunked
@@ -247,63 +243,16 @@ final class BatchChunker(
     * compute. Adaptive resizing/runtime-targeting is inherently sequential
     * (each chunk's observation feeds the next plan), so this entry point
     * requires the fixed-size configuration: no count probe, resizing
-    * disabled. Retry stays per-chunk.
+    * disabled. Retry stays per-chunk. The first chunk to exhaust its retries
+    * fails the call once the chunk actions already running have finished
+    * ([[ChunkEngine.dispatchParallel]]). Returns the planned chunks.
     */
   def foreachChunkPar(parallelism: Int)(f: (Chunk, DataFrame) => Unit): Vector[Chunk] = {
-    require(parallelism >= 1, "parallelism must be >= 1")
-    require(cfg.targetTime == 0 && cfg.minChunkPercent <= 0,
-      "foreachChunkPar needs the fixed-size configuration (targetTime = 0, minChunkPercent <= 0): " +
-        "adaptive resizing is sequential by nature")
-    val chunks = Vector.newBuilder[Chunk]
-    // plan with no dispatch (driver-side math only); a plan is no progress
-    val planner = new ChunkEngine(cfg.withoutStateFile, None, None, clock)
-    planner.minId = engine.minId
-    planner.maxId = engine.maxId
-    planner.execute(c => chunks += c, markTimerOnDispatch = false)
-    val planned = chunks.result()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    // Fail fast: the first chunk to exhaust its retry budget fails the
-    // whole call promptly (not after every earlier chunk happens to
-    // finish), and sets a flag that stops queued chunks from launching
-    // and in-flight retries from continuing — no minutes of doomed work
-    // behind a failure at a 100x chunk count. Already-running sibling
-    // actions complete; their output is ignorable because chunk writes
-    // are overwrite-idempotent by construction.
-    val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val outcome = scala.concurrent.Promise[Unit]()
-    try {
-      val futures = planned.map { c =>
-        scala.concurrent.Future {
-          var attempt = 0
-          var done = failed.get // a poisoned run launches nothing new
-          while (!done && !failed.get) {
-            attempt += 1
-            try { f(c, chunkDf(c)); done = true }
-            catch {
-              // Same retry classification as the sequential engine: only
-              // cfg.retryOn failures (default NonFatal) earn the budget.
-              case e: Throwable if attempt < cfg.retryAttempts && cfg.retryOn(e) =>
-                cfg.log(s"Chunk $c attempt $attempt/${cfg.retryAttempts} failed, retrying: ${e.getMessage}")
-              case e: Throwable =>
-                failed.set(true)
-                outcome.tryFailure(e)
-                throw e
-            }
-          }
-        }
-      }
-      locally {
-        // Completion callbacks run inline, not on `pool`: after a poisoned
-        // run the finally below shuts the pool down while queued futures
-        // still complete, and a callback sent there would be rejected.
-        implicit val ec: scala.concurrent.ExecutionContext = scala.concurrent.ExecutionContext.parasitic
-        scala.concurrent.Future.sequence(futures).foreach(_ => outcome.trySuccess(()))
-      }
-      scala.concurrent.Await.result(outcome.future, scala.concurrent.duration.Duration.Inf)
-      planned
-    } finally pool.shutdown()
+    cfg.requireFixedSize("foreachChunkPar")
+    val planned = (for (mn <- engine.minId; mx <- engine.maxId) yield Chunk.fixedPlan(mn, mx, cfg.chunkSize))
+      .getOrElse(Vector.empty)
+    ChunkEngine.dispatchParallel(cfg, planned, parallelism) { c => f(c, chunkDf(c)); "processed" }
+    planned
   }
 }
 

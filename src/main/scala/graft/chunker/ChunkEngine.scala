@@ -1,5 +1,7 @@
 package graft.chunker
 
+import java.util.concurrent.{Callable, Executors}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 import scala.collection.mutable.ArrayBuffer
 
 /** Where the engine learns about the keyspace it is chunking.
@@ -95,7 +97,12 @@ final class ChunkEngine(
     * lib/DBIx/BatchChunker.pm:1309, 1319 — a failed chunk restarts whole,
     * which is what makes single-row dispatch retry-safe, t/dbic.t:461-502).
     */
-  def execute(process: Chunk => Unit, markTimerOnDispatch: Boolean = true): ExecutionReport = {
+  def execute(process: Chunk => Unit, markTimerOnDispatch: Boolean = true): ExecutionReport =
+    executeLabelled(c => { process(c); "processed" }, markTimerOnDispatch)
+
+  /** [[execute]] with a `process` that returns the chunk's outcome action,
+    * such as "skipped-journal" for a chunk whose work was already committed. */
+  private[graft] def executeLabelled(process: Chunk => String, markTimerOnDispatch: Boolean = true): ExecutionReport = {
     val outcomes = ArrayBuffer.empty[ChunkOutcome]
     val count = for { mn <- minId; mx <- maxId } yield mx - mn + 1
     // count <= 0 happens when a persisted resume point sits past maxId (the
@@ -136,12 +143,12 @@ final class ChunkEngine(
         processPastMaxChecker(ls) match {
           case NothingLeft => done = true
           case Proceed =>
-            if (processBlock(ls, process, markTimerOnDispatch, outcomes)) {
+            processBlock(ls, process, markTimerOnDispatch, outcomes).foreach { action =>
               ls.prevRuntime = Some(clock.now() - ls.chunkTimer)
               if (cfg.sleep > 0) clock.sleep(cfg.sleep)
               outcomes += ChunkOutcome(Chunk(ls.start.get, ls.end), ls.chunkCount,
-                "processed", ls.prevRuntime.get, ls.chunkSize)
-              printChunkStatus(ls, "processed")
+                action, ls.prevRuntime.get, ls.chunkSize)
+              printChunkStatus(ls, action)
               runtimeChecker(ls)
               ls.resetChunkState()
               persistResume(ls)
@@ -204,17 +211,17 @@ final class ChunkEngine(
 
   /** Port of `_process_block` (lib/DBIx/BatchChunker.pm:1247-1383): count
     * probe, decision ladder, then the dispatch wrapped in the retry loop.
+    * Returns the dispatched block's action; None when it was not dispatched.
     */
   private def processBlock(
       ls: LoopState,
-      process: Chunk => Unit,
+      process: Chunk => String,
       markTimerOnDispatch: Boolean,
       outcomes: ArrayBuffer[ChunkOutcome]
-  ): Boolean = {
+  ): Option[String] = {
     countProbe.foreach(probe => ls.chunkCount = Some(probeCount(ls, probe)))
-    if (!chunkCountChecker(ls, outcomes)) return false
-    withRetry(() => { process(Chunk(ls.start.get, ls.end)); BigInt(0) }, ls, markTimerOnDispatch)
-    true
+    if (!chunkCountChecker(ls, outcomes)) None
+    else Some(withRetry(() => process(Chunk(ls.start.get, ls.end)), ls, markTimerOnDispatch))
   }
 
   /** The block's row count: from the window when one covers it, else live.
@@ -266,25 +273,7 @@ final class ChunkEngine(
     * run is starting up must not kill a job whose per-chunk path would
     * have survived ten attempts.
     */
-  def retrying[A](what: String)(f: => A): A = {
-    var attempt = 0
-    var result: Option[A] = None
-    while (result.isEmpty) {
-      attempt += 1
-      try result = Some(f)
-      catch {
-        // A failure only earns a retry when the budget allows AND the
-        // failure class is retryable (cfg.retryOn, default NonFatal) — the
-        // reference's retry_handler classification hook
-        // (lib/DBIx/BatchChunker.pm:236-288). Retrying an OutOfMemoryError
-        // or a cancellation burns the budget on a doomed run and masks the
-        // real failure.
-        case e: Throwable if attempt < cfg.retryAttempts && cfg.retryOn(e) =>
-          cfg.log(s"$what attempt $attempt/${cfg.retryAttempts} failed, retrying: ${e.getMessage}")
-      }
-    }
-    result.get
-  }
+  def retrying[A](what: String)(f: => A): A = ChunkEngine.retrying(cfg, what, aborted = false)(f)
 
   /** Port of `_chunk_count_checker` (lib/DBIx/BatchChunker.pm:1475-1570) —
     * the decision ladder. Returns true when the block should be processed.
@@ -435,5 +424,69 @@ final class ChunkEngine(
     val line = (s"IDs ${num(start)} to ${num(ls.end)} " +
       s"$action, $countStr rows found ($pctStr of chunk size) $rt").trim + progress
     cfg.log(if (squeeze) line.replaceAll("\\s+", " ").replaceAll("\\(\\s+", "(") else line)
+  }
+}
+
+object ChunkEngine {
+
+  /** Thrown in place of an attempt once a parallel run is poisoned. */
+  private object Aborted extends scala.util.control.ControlThrowable
+
+  /** The one retry loop behind every dispatch path. `aborted` is checked
+    * before each attempt; once it holds, the loop throws [[Aborted]], which
+    * is neither retried nor logged as a retry. */
+  private def retrying[A](cfg: ChunkerConfig, what: String, aborted: => Boolean)(f: => A): A = {
+    var attempt = 0
+    var result: Option[A] = None
+    while (result.isEmpty) {
+      if (aborted) throw Aborted
+      attempt += 1
+      try result = Some(f)
+      catch {
+        // A failure only earns a retry when the budget allows AND the
+        // failure class is retryable (cfg.retryOn, default NonFatal) — the
+        // reference's retry_handler classification hook
+        // (lib/DBIx/BatchChunker.pm:236-288). Retrying an OutOfMemoryError
+        // or a cancellation burns the budget on a doomed run and masks the
+        // real failure.
+        case e: Throwable if attempt < cfg.retryAttempts && cfg.retryOn(e) =>
+          cfg.log(s"$what attempt $attempt/${cfg.retryAttempts} failed, retrying: ${e.getMessage}")
+      }
+    }
+    result.get
+  }
+
+  /** Runs a fixed chunk plan on `parallelism` workers, each chunk's `body`
+    * (which returns its outcome action) under the retry loop. The first chunk
+    * to exhaust its retries poisons the run: no worker takes another chunk,
+    * a retry in flight stops before its next attempt ("aborted"), and the
+    * failure is rethrown once the chunks already running have finished, so
+    * none is cut off mid-commit. Returns the outcomes in plan order. */
+  private[graft] def dispatchParallel(cfg: ChunkerConfig, planned: Vector[Chunk], parallelism: Int)(
+      body: Chunk => String): Vector[ChunkOutcome] = {
+    require(parallelism >= 1, "parallelism must be >= 1")
+    val next = new AtomicInteger(0)
+    val failure = new AtomicReference[Throwable]()
+    val outcomes = new Array[ChunkOutcome](planned.size)
+    val worker: Callable[Unit] = () => {
+      var i = next.getAndIncrement()
+      while (i < planned.size && failure.get == null) {
+        val c = planned(i)
+        val t0 = System.nanoTime()
+        def outcome(action: String) =
+          ChunkOutcome(c, None, action, (System.nanoTime() - t0) / 1e9, cfg.chunkSize)
+        try outcomes(i) = outcome(retrying(cfg, s"Chunk $c", failure.get != null)(body(c)))
+        catch {
+          case Aborted      => outcomes(i) = outcome("aborted")
+          case e: Throwable => failure.compareAndSet(null, e)
+        }
+        i = next.getAndIncrement()
+      }
+    }
+    val pool = Executors.newFixedThreadPool(parallelism)
+    try pool.invokeAll(java.util.Collections.nCopies(parallelism.min(planned.size), worker))
+    finally pool.shutdown()
+    Option(failure.get).foreach(e => throw e)
+    outcomes.toVector
   }
 }

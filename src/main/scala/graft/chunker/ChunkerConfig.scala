@@ -13,6 +13,21 @@ package graft.chunker
 final case class Chunk(start: BigInt, end: BigInt) {
   require(end >= start, s"Chunk end $end < start $start")
   def width: BigInt = end - start + 1
+
+  /** `template` with `{start}`/`{end}` replaced by this chunk's bounds — the
+    * stand-in for the reference's `BETWEEN ? AND ?` binds
+    * (lib/DBIx/BatchChunker.pm:116-131). */
+  def fill(template: String): String =
+    template.replace("{start}", start.toString).replace("{end}", end.toString)
+}
+
+object Chunk {
+
+  /** `size`-wide chunks from `min`, the last cut at `max`: the engine's walk
+    * with resizing off, as a pure function, so a resumed run replans the
+    * same boundaries. Empty when `min > max`. */
+  def fixedPlan(min: BigInt, max: BigInt, size: BigInt): Vector[Chunk] =
+    Iterator.iterate(min)(_ + size).takeWhile(_ <= max).map(s => Chunk(s, (s + size - 1).min(max))).toVector
 }
 
 /** Tuning attributes of the chunk loop, mirroring the reference's attribute
@@ -26,7 +41,10 @@ final case class Chunk(start: BigInt, end: BigInt) {
   * @param sleep            seconds to pause between chunks, letting the
   *                         source system breathe (lib/DBIx/BatchChunker.pm:596-614).
   *                         Default 0.5 in the reference; we keep it for parity
-  *                         but most Spark workloads want 0.
+  *                         but most Spark workloads want 0. Only the sequential
+  *                         loop sleeps: planning passes and the fixed-size
+  *                         parallel paths (`foreachChunkPar`, `readChunked`,
+  *                         `executeChunkedDmlPar`) never do.
   * @param maxRuntime       total wall-clock budget in seconds; loop exits
   *                         early and remains resumable (lib/DBIx/BatchChunker.pm:616-634)
   * @param minChunkPercent  chunk density band [p, 1+p]·chunkSize; <=0 disables
@@ -86,9 +104,15 @@ final case class ChunkerConfig(
       "this results in one chunk per id, which is probably not what you want")
 
   /** This config without a state file, for runs whose resume point lives
-    * elsewhere (a commit record) or must not move (a planning pass). */
+    * elsewhere (a commit record). */
   private[graft] def withoutStateFile: ChunkerConfig =
     if (stateDir.isEmpty) this else copy(stateDir = None)
+
+  /** For entry points that plan every chunk up front ([[Chunk.fixedPlan]]):
+    * adaptive resizing is sequential by nature. */
+  private[graft] def requireFixedSize(caller: String): Unit =
+    require(targetTime == 0 && minChunkPercent <= 0,
+      s"$caller plans every chunk up front: it needs targetTime = 0 and minChunkPercent <= 0")
 }
 
 /** What happened to one chunk — collected into an [[ExecutionReport]].
@@ -97,7 +121,7 @@ final case class ChunkerConfig(
 final case class ChunkOutcome(
     chunk: Chunk,
     count: Option[BigInt],
-    action: String, // "processed" | "skipped" | "skipped-journal"
+    action: String, // "processed" | "skipped" | "skipped-journal" | "aborted"
     runtime: Double,
     chunkSizeAtRun: BigInt
 )

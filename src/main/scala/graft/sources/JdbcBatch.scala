@@ -5,6 +5,48 @@ import java.util.Properties
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.chunker._
 
+/** Self-healing autocommit connection for IDEMPOTENT probe reads (range
+  * discovery, count probes, journal point-SELECTs). The probe side serves
+  * every chunk of a run, so one dropped socket must not fail the whole run
+  * while the DML side happily reconnects (DBIx::Connector fixup semantics,
+  * reference lib/DBIx/BatchChunker.pm:104-112). Probes are reads, so unlike
+  * the DML path we can rebuild the handle and re-issue the SAME statement
+  * immediately instead of deferring to the engine's chunk-level retry. No
+  * per-call liveness ping (that would be a DB roundtrip per probe): only a
+  * connection-class FAILURE triggers the rebuild.
+  */
+private[graft] final class ProbeConnection(url: String, props: Properties) extends AutoCloseable {
+  private var conn = DriverManager.getConnection(url, props)
+
+  /** Current underlying handle — exposed so tests can fault-inject a drop. */
+  def current: java.sql.Connection = conn
+
+  def apply[A](f: java.sql.Connection => A): A =
+    try f(conn)
+    catch {
+      case e: Throwable if ProbeConnection.dead(e, conn) =>
+        try conn.close() catch { case _: Throwable => () }
+        conn = DriverManager.getConnection(url, props)
+        f(conn)
+    }
+
+  override def close(): Unit = conn.close()
+}
+
+private[graft] object ProbeConnection {
+
+  /** Did failure `e` leave `c` unusable? A connection-class SQLException
+    * says so outright; any other failure is checked with a liveness ping. */
+  def dead(e: Throwable, c: java.sql.Connection): Boolean = e match {
+    case _: java.sql.SQLNonTransientConnectionException => true
+    case _: java.sql.SQLRecoverableException => true
+    case _: java.sql.SQLTransientConnectionException => true
+    case _ =>
+      try c.isClosed || !c.isValid(5)
+      catch { case _: Throwable => true }
+  }
+}
+
 /** Chunked JDBC source/sink — the reference's home turf (a live RDBMS,
   * reference lib/DBIx/BatchChunker.pm:70-89) mapped onto Spark's JDBC
   * connector:
@@ -26,67 +68,131 @@ import graft.chunker._
   * read holds no locks — sequencing only matters for writes, where we keep
   * the reference's strict chunk-at-a-time order.
   */
-/** Self-healing autocommit connection for IDEMPOTENT probe reads (range
-  * discovery, count probes, journal point-SELECTs). The probe side serves
-  * every chunk of a run, so one dropped socket must not fail the whole run
-  * while the DML side happily reconnects (DBIx::Connector fixup semantics,
-  * reference lib/DBIx/BatchChunker.pm:104-112). Probes are reads, so unlike
-  * the DML path we can rebuild the handle and re-issue the SAME statement
-  * immediately instead of deferring to the engine's chunk-level retry. No
-  * per-call liveness ping (that would be a DB roundtrip per probe): only a
-  * connection-class FAILURE triggers the rebuild.
-  */
-private[graft] final class ProbeConnection(url: String, props: Properties) extends AutoCloseable {
-  private var conn = DriverManager.getConnection(url, props)
-
-  /** Current underlying handle — exposed so tests can fault-inject a drop. */
-  def current: java.sql.Connection = conn
-
-  private def dead(e: Throwable): Boolean = e match {
-    case _: java.sql.SQLNonTransientConnectionException => true
-    case _: java.sql.SQLRecoverableException => true
-    case _: java.sql.SQLTransientConnectionException => true
-    case _ =>
-      try conn.isClosed || !conn.isValid(5)
-      catch { case _: Throwable => true }
-  }
-
-  def apply[A](f: java.sql.Connection => A): A =
-    try f(conn)
-    catch {
-      case e: Throwable if dead(e) =>
-        try conn.close() catch { case _: Throwable => () }
-        conn = DriverManager.getConnection(url, props)
-        f(conn)
-    }
-
-  override def close(): Unit = conn.close()
-}
-
 object JdbcBatch {
 
   /** ANSI-quoted identifier — matches how Spark's JDBC dialects create
     * columns (case-sensitive), so `id` written by Spark stays addressable. */
   private def quoted(ident: String): String = "\"" + ident.replace("\"", "\"\"") + "\""
 
+  /** SQL string literal. */
+  private def literal(s: String): String = "'" + s.replace("'", "''") + "'"
+
+  private def update(c: java.sql.Connection, sql: String): Unit = {
+    val st = c.createStatement()
+    try st.executeUpdate(sql) finally st.close()
+  }
+
+  /** Runs one query on `c` and hands its result set to `read`. */
+  private def query[A](c: java.sql.Connection, sql: String)(read: java.sql.ResultSet => A): A = {
+    val st = c.createStatement()
+    try read(st.executeQuery(sql)) finally st.close()
+  }
+
+  /** The first column of the first row as an id; None on no row or NULL. */
+  private def idOf(rs: java.sql.ResultSet): Option[BigInt] =
+    if (!rs.next()) None else Option(rs.getBigDecimal(1)).map(d => BigInt(d.toBigInteger))
+
+  /** Create the journal table unless it exists (see `commitLog` on
+    * [[executeChunkedDml]]). Derby has no CREATE TABLE IF NOT EXISTS;
+    * SQLState X0Y32 = exists. */
+  private def createJournal(probe: ProbeConnection, tbl: String): Unit =
+    try probe(update(_,
+      s"""CREATE TABLE $tbl ("run_id" VARCHAR(128) NOT NULL,
+         | "chunk_start" BIGINT NOT NULL,
+         | "chunk_end" BIGINT NOT NULL,
+         | PRIMARY KEY ("run_id", "chunk_start", "chunk_end"))""".stripMargin))
+    catch { case e: java.sql.SQLException if e.getSQLState == "X0Y32" => () }
+
+  /** Chunk transactions on one `autoCommit=false` DML connection, with a
+    * [[ProbeConnection]] for journal reads. [[run]] is the body the reference
+    * wraps in `DBIx::Connector::Retry->run` (lib/DBIx/BatchChunker.pm:1297-1350).
+    * One instance per dispatching thread.
+    *
+    * Reconnect follows DBIx::Connector's fixup mode (:104-112, 236-288): no
+    * per-chunk liveness ping; a failure that leaves the DML connection dead
+    * marks it, and the next attempt reopens it first — retrying on a dead
+    * socket burns the budget, and reopening there keeps each attempt's
+    * error the chunk's own.
+    *
+    * @param journal the `commitLog` table, if any, and the run's quoted id
+    */
+  private final class ChunkTxn(
+      url: String,
+      props: Properties,
+      template: String,
+      journal: Option[(String, String)],
+      inTxn: (Chunk, java.sql.Connection) => Unit
+  ) extends AutoCloseable {
+    val probe = new ProbeConnection(url, props)
+    private var dml = open()
+    private var reconnectPending = false
+
+    private def open(): java.sql.Connection = {
+      val c = DriverManager.getConnection(url, props)
+      c.setAutoCommit(false)
+      c
+    }
+
+    /** Is this chunk's journal row already COMMITTED? (The probe is a
+      * separate autocommit connection, so it sees only committed work — a
+      * row from a lost-ack commit is visible, an uncommitted one from a live
+      * transaction is not.) */
+    private def committed(chunk: Chunk): Boolean = journal.exists { case (tbl, runIdSql) =>
+      probe(query(_,
+        s"""SELECT COUNT(*) FROM $tbl WHERE "run_id" = $runIdSql""" +
+          s""" AND "chunk_start" = ${chunk.start} AND "chunk_end" = ${chunk.end}""") { rs =>
+        rs.next(); rs.getLong(1) > 0
+      })
+    }
+
+    /** Runs `chunk` in one transaction. Returns "processed", or
+      * "skipped-journal" when its journal row is already committed (a lost
+      * commit ack or a prior process): probed on EVERY attempt, so a retry
+      * after a lost ack skips instead of applying the chunk twice. */
+    def run(chunk: Chunk): String = {
+      if (reconnectPending) {
+        try dml.close() catch { case _: Throwable => () }
+        dml = open()
+        reconnectPending = false
+      }
+      if (committed(chunk)) "skipped-journal"
+      else try {
+        update(dml, chunk.fill(template))
+        // Journal row BEFORE inTxn and commit — same transaction, so it
+        // becomes visible to other connections atomically WITH the
+        // chunk's work, and a rollback erases both together.
+        journal.foreach { case (tbl, runIdSql) =>
+          update(dml, s"INSERT INTO $tbl VALUES ($runIdSql, ${chunk.start}, ${chunk.end})")
+        }
+        inTxn(chunk, dml)
+        dml.commit()
+        "processed"
+      } catch {
+        case e: Throwable =>
+          // Clean slate for the retry; a rollback failure (dead
+          // connection) must not mask the original error.
+          try dml.rollback() catch { case _: Throwable => () }
+          if (ProbeConnection.dead(e, dml)) reconnectPending = true
+          throw e
+      }
+    }
+
+    override def close(): Unit = try probe.close() finally dml.close()
+  }
+
   /** One-roundtrip range discovery over JDBC (no Spark job). */
   def discoverRange(url: String, table: String, idColumn: String, props: Properties = new Properties): Option[(BigInt, BigInt)] = {
     val conn = DriverManager.getConnection(url, props)
-    try {
-      val rs = conn.createStatement().executeQuery(
-        s"SELECT MIN(${quoted(idColumn)}), MAX(${quoted(idColumn)}) FROM $table")
-      if (!rs.next()) None
-      else {
-        val mn = rs.getBigDecimal(1)
-        val mx = rs.getBigDecimal(2)
-        if (mn == null || mx == null) None
-        else Some((BigInt(mn.toBigInteger), BigInt(mx.toBigInteger)))
-      }
+    try query(conn, s"SELECT MIN(${quoted(idColumn)}), MAX(${quoted(idColumn)}) FROM $table") { rs =>
+      for (mn <- idOf(rs); mx <- Option(rs.getBigDecimal(2))) yield (mn, BigInt(mx.toBigInteger))
     } finally conn.close()
   }
 
   /** Chunk-partitioned parallel JDBC read: one Spark partition per planned
-    * chunk, each bounded by a sargable BETWEEN predicate.
+    * chunk, each bounded by a sargable BETWEEN predicate. The chunks are
+    * `cfg`'s fixed-size plan over the discovered range ([[Chunk.fixedPlan]]),
+    * so `cfg` must be the fixed-size configuration (targetTime = 0,
+    * minChunkPercent <= 0); `cfg.sleep` does not apply.
     */
   def readChunked(
       spark: SparkSession,
@@ -96,12 +202,9 @@ object JdbcBatch {
       cfg: ChunkerConfig,
       props: Properties = new Properties
   ): DataFrame = {
-    val engine = new ChunkEngine(cfg.withoutStateFile, None, None) // a plan is no progress
-    discoverRange(url, table, idColumn, props).foreach { case (mn, mx) =>
-      engine.minId = Some(mn); engine.maxId = Some(mx)
-    }
-    val chunks = scala.collection.mutable.ArrayBuffer.empty[Chunk]
-    engine.execute(c => chunks += c, markTimerOnDispatch = false)
+    cfg.requireFixedSize("readChunked")
+    val chunks = discoverRange(url, table, idColumn, props)
+      .fold(Vector.empty[Chunk]) { case (mn, mx) => Chunk.fixedPlan(mn, mx, cfg.chunkSize) }
     if (chunks.isEmpty)
       return spark.read.jdbc(url, table, props).limit(0)
     val predicates = chunks.map(c => s"${quoted(idColumn)} BETWEEN ${c.start} AND ${c.end}").toArray
@@ -208,78 +311,21 @@ object JdbcBatch {
         "implicit shared default would make a second legitimate run a silent no-op " +
         "against the first run's journal. Pass an explicit runId (re-use it to resume " +
         "a crashed run; use a fresh one for a new logical run).")
-    val probeConn = new ProbeConnection(url, props)
-    var dmlConn = DriverManager.getConnection(url, props)
-    val runIdSql = "'" + runId.replace("'", "''") + "'"
-    // The reference's retry stack is DBIx::Connector::Retry
-    // (lib/DBIx/BatchChunker.pm:104-112, 236-288), whose whole point is
-    // RECONNECTING before re-running a failed chunk — a dropped connection
-    // is the #1 transient failure this machinery exists for, and retrying
-    // on the same dead socket would burn the whole budget. We mirror its
-    // fixup-mode shape: no per-chunk liveness ping (that's a DB roundtrip
-    // per chunk); only a connection-class FAILURE marks the handle for
-    // rebuild, and the retry's next entry into the chunk body reopens it.
-    var reconnectPending = false
-    def connectionClass(e: Throwable): Boolean = e match {
-      case _: java.sql.SQLNonTransientConnectionException => true
-      case _: java.sql.SQLRecoverableException => true
-      case _: java.sql.SQLTransientConnectionException => true
-      case _ => false
-    }
-    def connectionDead(e: Throwable): Boolean = connectionClass(e) || {
-      try dmlConn.isClosed || !dmlConn.isValid(5)
-      catch { case _: Throwable => true }
-    }
+    val runIdSql = literal(runId)
+    val txn = new ChunkTxn(url, props, template, commitLog.map((_, runIdSql)), inTxn)
     try {
-      dmlConn.setAutoCommit(false)
-      // Journal table for ack-lost idempotence (see @param commitLog).
-      // Derby has no CREATE TABLE IF NOT EXISTS; SQLState X0Y32 = exists.
-      commitLog.foreach { tbl =>
-        try probeConn { c =>
-          val st = c.createStatement()
-          try st.executeUpdate(
-            s"""CREATE TABLE $tbl ("run_id" VARCHAR(128) NOT NULL,
-               | "chunk_start" BIGINT NOT NULL,
-               | "chunk_end" BIGINT NOT NULL,
-               | PRIMARY KEY ("run_id", "chunk_start", "chunk_end"))""".stripMargin)
-          finally st.close()
-        } catch {
-          case e: java.sql.SQLException if e.getSQLState == "X0Y32" => ()
-        }
-      }
-      /** Is this chunk's journal row already COMMITTED? (probeConn is a
-        * separate autocommit connection, so it sees only committed work —
-        * a row from a lost-ack commit is visible, an uncommitted one from
-        * a live transaction is not.) */
-      def alreadyCommitted(chunk: Chunk): Boolean = commitLog.exists { tbl =>
-        probeConn { c =>
-          val st = c.createStatement()
-          try {
-            val rs = st.executeQuery(
-              s"""SELECT COUNT(*) FROM $tbl WHERE "run_id" = $runIdSql""" +
-                s""" AND "chunk_start" = ${chunk.start} AND "chunk_end" = ${chunk.end}""")
-            rs.next(); rs.getLong(1) > 0
-          } finally st.close()
-        }
-      }
+      commitLog.foreach(createJournal(txn.probe, _))
       val source = new RangeSource {
-        private def agg(fn: String): Option[BigInt] = probeConn { c =>
-          val rs = c.createStatement().executeQuery(
-            s"SELECT $fn(${quoted(idColumn)}) FROM $rangeTable")
-          if (!rs.next()) None
-          else Option(rs.getBigDecimal(1)).map(d => BigInt(d.toBigInteger))
-        }
+        private def agg(fn: String): Option[BigInt] =
+          txn.probe(query(_, s"SELECT $fn(${quoted(idColumn)}) FROM $rangeTable")(idOf))
         override def minId(): Option[BigInt] = agg("MIN")
         override def maxId(): Option[BigInt] = agg("MAX")
       }
       val probe: Option[(BigInt, BigInt) => BigInt] =
         if (!enableCountProbe) None
         else Some { (s, e) =>
-          probeConn { c =>
-            val rs = c.createStatement().executeQuery(
-              s"SELECT COUNT(*) FROM $rangeTable WHERE ${quoted(idColumn)} BETWEEN $s AND $e")
-            rs.next(); BigInt(rs.getLong(1))
-          }
+          val sql = s"SELECT COUNT(*) FROM $rangeTable WHERE ${quoted(idColumn)} BETWEEN $s AND $e"
+          txn.probe(query(_, sql) { rs => rs.next(); BigInt(rs.getLong(1)) })
         }
       // With a journal, the journal is the resume record; the state file
       // would only add a write per chunk.
@@ -301,66 +347,16 @@ object JdbcBatch {
       // is the state file the engine writes after each commit.
       val resumePoint = commitLog match {
         case Some(tbl) =>
-          engine.retrying("Journal high-water-mark probe")(probeConn { c =>
-            val st = c.createStatement()
-            try {
-              val rs = st.executeQuery(
-                s"""SELECT MAX("chunk_end") FROM $tbl WHERE "run_id" = $runIdSql""")
-              if (!rs.next()) None
-              else Option(rs.getBigDecimal(1)).map(d => BigInt(d.toBigInteger))
-            } finally st.close()
-          })
+          engine.retrying("Journal high-water-mark probe")(txn.probe(
+            query(_, s"""SELECT MAX("chunk_end") FROM $tbl WHERE "run_id" = $runIdSql""")(idOf)))
         case None => cfg.stateDir.flatMap(ResumeState.read)
       }
       for (pe <- resumePoint if engine.minId.forall(_ <= pe)) engine.minId = Some(pe + 1)
-      // Chunks whose body was skipped because their journal row was already
-      // committed (lost-ack retry or a prior process): the engine records
-      // them as dispatched, so they are re-labelled in the report below —
-      // an operator auditing an exactly-once resume must be able to tell
+      // "skipped-journal", not "processed", for a chunk already committed
+      // (lost ack or prior process): an exactly-once audit must tell
       // replayed-and-skipped from executed.
-      val journalSkipped = scala.collection.mutable.Set.empty[Chunk]
-      val report = engine.execute { chunk =>
-        if (reconnectPending) {
-          try dmlConn.close() catch { case _: Throwable => () }
-          dmlConn = DriverManager.getConnection(url, props)
-          dmlConn.setAutoCommit(false)
-          reconnectPending = false
-        }
-        if (alreadyCommitted(chunk)) journalSkipped += chunk // lost-ack commit or prior process
-        else try {
-          val sql = template
-            .replace("{start}", chunk.start.toString)
-            .replace("{end}", chunk.end.toString)
-          val st = dmlConn.createStatement()
-          try st.executeUpdate(sql) finally st.close()
-          // Journal row BEFORE inTxn and commit — same transaction, so it
-          // becomes visible to other connections atomically WITH the
-          // chunk's work, and a rollback erases both together.
-          commitLog.foreach { tbl =>
-            val st2 = dmlConn.createStatement()
-            try st2.executeUpdate(
-              s"INSERT INTO $tbl VALUES ($runIdSql, ${chunk.start}, ${chunk.end})")
-            finally st2.close()
-          }
-          inTxn(chunk, dmlConn)
-          dmlConn.commit()
-        } catch {
-          case e: Throwable =>
-            // Clean slate for the engine's retry wrapper; a rollback
-            // failure (dead connection) must not mask the original error.
-            try dmlConn.rollback() catch { case _: Throwable => () }
-            if (connectionDead(e)) reconnectPending = true
-            throw e
-        }
-      }
-      // A lost-ack chunk can journal-skip on its RETRY after a first attempt
-      // did the work — "skipped-journal" still describes the final dispatch
-      // (the body did not run on the attempt that succeeded).
-      report.copy(outcomes = report.outcomes.map(o =>
-        if (journalSkipped(o.chunk)) o.copy(action = "skipped-journal") else o))
-    } finally {
-      try probeConn.close() finally dmlConn.close()
-    }
+      engine.executeLabelled(txn.run)
+    } finally txn.close()
   }
 
   /** PARALLEL chunked DML with the commit journal — the 100-TB extension of
@@ -396,15 +392,18 @@ object JdbcBatch {
     *    processes race the first insert, both re-read and the lowest
     *    (start, end) row deterministically wins for both.
     *
-    * Failure semantics match [[graft.chunker.BatchChunker.foreachChunkPar]]:
-    * per-chunk retry under `cfg.retryAttempts`/`cfg.retryOn` (with
-    * reconnect-on-dead, per worker), first exhausted budget poisons the run
-    * — queued chunks stop launching, in-flight chunks complete (their
-    * commits are durable and journaled, which is exactly what makes the
-    * resume correct). A retried chunk re-probes its journal row first, so a
-    * lost commit ack is skipped, not double-applied. A duplicate journal
-    * INSERT from a concurrent same-runId process surfaces as a PK violation
-    * → rollback → retry → journal-skip: self-healing, never double-applied.
+    * Failure semantics match [[graft.chunker.BatchChunker.foreachChunkPar]]
+    * (both dispatch through [[graft.chunker.ChunkEngine.dispatchParallel]]):
+    * per-chunk retry under `cfg.retryAttempts`/`cfg.retryOn`, with a dead
+    * connection reopened by the worker's next attempt, exactly as in
+    * [[executeChunkedDml]]; the first exhausted budget poisons the run —
+    * queued chunks stop launching, and the call throws once the in-flight
+    * chunks complete (their commits are durable and journaled, which is
+    * exactly what makes the resume correct). A retried chunk re-probes its
+    * journal row first, so a lost commit ack is skipped, not double-applied.
+    * A duplicate journal INSERT from a concurrent same-runId process
+    * surfaces as a PK violation → rollback → retry → journal-skip:
+    * self-healing, never double-applied. `cfg.sleep` does not apply.
     *
     * `commitLog` and `runId` are REQUIRED here (not optional as in the
     * sequential path): without the journal there is no out-of-order resume
@@ -414,9 +413,8 @@ object JdbcBatch {
     * Returns an [[ExecutionReport]] with outcomes in PLAN order (not
     * completion order): "processed" ran this call, "skipped-journal" was
     * already committed (this run's lost-ack retries or a prior process),
-    * "aborted" was abandoned unapplied because the run was poisoned (only
-    * observable if the outcome map is surfaced on a failure path — a
-    * successful run never contains one).
+    * "aborted" was abandoned unapplied because the run was poisoned (a
+    * poisoned run throws, so a returned report never contains one).
     */
   def executeChunkedDmlPar(
       url: String,
@@ -432,46 +430,25 @@ object JdbcBatch {
   ): ExecutionReport = {
     require(parallelism >= 1, "parallelism must be >= 1")
     require(runId.nonEmpty, "runId is required: journal rows and the plan row are scoped by it")
-    require(cfg.targetTime == 0 && cfg.minChunkPercent <= 0,
-      "executeChunkedDmlPar needs the fixed-size configuration (targetTime = 0, " +
-        "minChunkPercent <= 0): deterministic chunk boundaries are what make the " +
-        "journal's coverage-set resume exact")
-    val runIdSql = "'" + runId.replace("'", "''") + "'"
-    val planIdSql = "'" + (runId + "#plan").replace("'", "''") + "'"
+    cfg.requireFixedSize("executeChunkedDmlPar")
+    val runIdSql = literal(runId)
+    val planIdSql = literal(runId + "#plan")
     val probeConn = new ProbeConnection(url, props)
-    // One DML + one probe connection per worker thread, tracked for close.
-    val opened = new java.util.concurrent.ConcurrentLinkedQueue[AutoCloseable]()
+    // One chunk transaction per worker thread, tracked for close.
+    val opened = new java.util.concurrent.ConcurrentLinkedQueue[ChunkTxn]()
     try {
-      // Journal table (same DDL as the sequential path; X0Y32 = exists).
-      try probeConn { c =>
-        val st = c.createStatement()
-        try st.executeUpdate(
-          s"""CREATE TABLE $commitLog ("run_id" VARCHAR(128) NOT NULL,
-             | "chunk_start" BIGINT NOT NULL,
-             | "chunk_end" BIGINT NOT NULL,
-             | PRIMARY KEY ("run_id", "chunk_start", "chunk_end"))""".stripMargin)
-        finally st.close()
-      } catch { case e: java.sql.SQLException if e.getSQLState == "X0Y32" => () }
-
-      def planRow(): Option[(BigInt, BigInt)] = probeConn { c =>
-        val st = c.createStatement()
-        try {
-          // Deterministic winner under a two-process insert race: lowest
-          // (start, end) row wins for everyone.
-          val rs = st.executeQuery(
-            s"""SELECT "chunk_start", "chunk_end" FROM $commitLog WHERE "run_id" = $planIdSql""" +
-              """ ORDER BY "chunk_start", "chunk_end" FETCH FIRST 1 ROWS ONLY""")
-          if (!rs.next()) None
-          else Some((BigInt(rs.getLong(1)), BigInt(rs.getLong(2))))
-        } finally st.close()
-      }
+      createJournal(probeConn, commitLog)
+      // Deterministic winner under a two-process insert race: lowest
+      // (start, end) row wins for everyone.
+      def planRow(): Option[(BigInt, BigInt)] = probeConn(query(_,
+        s"""SELECT "chunk_start", "chunk_end" FROM $commitLog WHERE "run_id" = $planIdSql""" +
+          """ ORDER BY "chunk_start", "chunk_end" FETCH FIRST 1 ROWS ONLY""") { rs =>
+        if (!rs.next()) None else Some((BigInt(rs.getLong(1)), BigInt(rs.getLong(2))))
+      })
       val pinned = planRow().orElse {
         discoverRange(url, rangeTable, idColumn, props).map { case (mn, mx) =>
-          try probeConn { c =>
-            val st = c.createStatement()
-            try st.executeUpdate(s"INSERT INTO $commitLog VALUES ($planIdSql, $mn, $mx)")
-            finally st.close()
-          } catch {
+          try probeConn(update(_, s"INSERT INTO $commitLog VALUES ($planIdSql, $mn, $mx)"))
+          catch {
             // PK violation = another process pinned first; fall through to
             // the deterministic re-read below either way.
             case e: java.sql.SQLException if e.getSQLState == "23505" => ()
@@ -485,163 +462,33 @@ object JdbcBatch {
           ExecutionReport(Vector.empty, finishedRange = true, None, None)
         case Some((mn, mx)) =>
           // Deterministic fixed-size plan over the PINNED range.
-          val planner = new ChunkEngine(cfg.withoutStateFile, None, None)
-          planner.minId = Some(mn); planner.maxId = Some(mx)
-          val chunkBuf = Vector.newBuilder[Chunk]
-          planner.execute(c => chunkBuf += c, markTimerOnDispatch = false)
-          val planned = chunkBuf.result()
+          val planned = Chunk.fixedPlan(mn, mx, cfg.chunkSize)
           // The journal's coverage set for this run — exact-match lookup is
           // sound because the plan above is a pure function of the pinned
           // range. One SELECT for the whole set (not one probe per chunk):
           // a resumed 100k-chunk run should not pay 100k point-SELECTs
           // before its first transaction.
-          val covered: Set[(BigInt, BigInt)] = probeConn { c =>
-            val st = c.createStatement()
-            try {
-              val rs = st.executeQuery(
-                s"""SELECT "chunk_start", "chunk_end" FROM $commitLog WHERE "run_id" = $runIdSql""")
-              val b = Set.newBuilder[(BigInt, BigInt)]
-              while (rs.next()) b += ((BigInt(rs.getLong(1)), BigInt(rs.getLong(2))))
-              b.result()
-            } finally st.close()
-          }
-          val outcomes =
-            new java.util.concurrent.ConcurrentHashMap[Chunk, ChunkOutcome]()
-          planned.filter(c => covered((c.start, c.end))).foreach { c =>
-            outcomes.put(c, ChunkOutcome(c, None, "skipped-journal", 0.0, cfg.chunkSize))
-          }
-          val todo = planned.filterNot(c => covered((c.start, c.end)))
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.fromExecutorService(pool)
-          val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
-          val outcome = scala.concurrent.Promise[Unit]()
-          val workerDml = ThreadLocal.withInitial[Array[java.sql.Connection]](() => {
-            val c = DriverManager.getConnection(url, props)
-            c.setAutoCommit(false)
-            opened.add(c)
-            Array(c)
+          val covered: Set[(BigInt, BigInt)] = probeConn(query(_,
+            s"""SELECT "chunk_start", "chunk_end" FROM $commitLog WHERE "run_id" = $runIdSql""") { rs =>
+            val b = Set.newBuilder[(BigInt, BigInt)]
+            while (rs.next()) b += ((BigInt(rs.getLong(1)), BigInt(rs.getLong(2))))
+            b.result()
           })
-          val workerProbe = ThreadLocal.withInitial[ProbeConnection](() => {
-            val p = new ProbeConnection(url, props)
-            opened.add(p)
-            p
-          })
-          def connectionClass(e: Throwable): Boolean = e match {
-            case _: java.sql.SQLNonTransientConnectionException => true
-            case _: java.sql.SQLRecoverableException => true
-            case _: java.sql.SQLTransientConnectionException => true
-            case _ => false
+          val txn = ThreadLocal.withInitial[ChunkTxn] { () =>
+            val t = new ChunkTxn(url, props, template, Some((commitLog, runIdSql)), inTxn)
+            opened.add(t)
+            t
           }
-          def alreadyCommitted(chunk: Chunk): Boolean = workerProbe.get() { c =>
-            val st = c.createStatement()
-            try {
-              val rs = st.executeQuery(
-                s"""SELECT COUNT(*) FROM $commitLog WHERE "run_id" = $runIdSql""" +
-                  s""" AND "chunk_start" = ${chunk.start} AND "chunk_end" = ${chunk.end}""")
-              rs.next(); rs.getLong(1) > 0
-            } finally st.close()
+          // Dispatch waits for in-flight chunks even on the poison path:
+          // their commits are the durable journaled work the resume builds
+          // on, so their connections must not close under them.
+          val outcomes = ChunkEngine.dispatchParallel(cfg, planned, parallelism) { c =>
+            if (covered((c.start, c.end))) "skipped-journal" else txn.get.run(c)
           }
-          try {
-            val dbg = sys.env.contains("SPARK_GRAFT_DMLPAR_DEBUG")
-            def trace(chunk: Chunk, phase: String): Unit =
-              if (dbg) System.err.println(
-                f"[dmlpar] ${System.nanoTime() / 1e9}%.3f chunk=${chunk.start} $phase")
-            val futures = todo.map { chunk =>
-              scala.concurrent.Future {
-                val t0 = System.nanoTime()
-                var attempt = 0
-                var done = failed.get // a poisoned run launches nothing new
-                var action = "processed"
-                while (!done && !failed.get) {
-                  attempt += 1
-                  try {
-                    // Lost-ack guard: probed on EVERY attempt — a retry after
-                    // a commit whose ack was lost must skip, not double-apply.
-                    trace(chunk, "probe-start")
-                    if (alreadyCommitted(chunk)) { action = "skipped-journal"; done = true }
-                    else {
-                      trace(chunk, "probe-done")
-                      val holder = workerDml.get()
-                      val conn = holder(0)
-                      try {
-                        val sql = template
-                          .replace("{start}", chunk.start.toString)
-                          .replace("{end}", chunk.end.toString)
-                        val st = conn.createStatement()
-                        trace(chunk, "update-start")
-                        try st.executeUpdate(sql) finally st.close()
-                        trace(chunk, "update-done")
-                        val st2 = conn.createStatement()
-                        try st2.executeUpdate(
-                          s"INSERT INTO $commitLog VALUES ($runIdSql, ${chunk.start}, ${chunk.end})")
-                        finally st2.close()
-                        inTxn(chunk, conn)
-                        trace(chunk, "intxn-done")
-                        conn.commit()
-                        trace(chunk, "committed")
-                        done = true
-                      } catch {
-                        case e: Throwable =>
-                          try conn.rollback() catch { case _: Throwable => () }
-                          val dead = connectionClass(e) || {
-                            try conn.isClosed || !conn.isValid(5)
-                            catch { case _: Throwable => true }
-                          }
-                          if (dead) {
-                            try conn.close() catch { case _: Throwable => () }
-                            val fresh = DriverManager.getConnection(url, props)
-                            fresh.setAutoCommit(false)
-                            opened.add(fresh)
-                            holder(0) = fresh
-                          }
-                          throw e
-                      }
-                    }
-                  } catch {
-                    case e: Throwable if attempt < cfg.retryAttempts && cfg.retryOn(e) =>
-                      cfg.log(s"Chunk $chunk attempt $attempt/${cfg.retryAttempts} failed, retrying: ${e.getMessage}")
-                    case e: Throwable =>
-                      failed.set(true)
-                      outcome.tryFailure(e)
-                      throw e
-                  }
-                }
-                // A worker can exit with done == false (launched after the
-                // run was poisoned, or the while-condition tripped mid-
-                // retry): it applied NOTHING, so it must not report
-                // "processed". Unreachable in today's surfaced reports only
-                // because the poison path throws before the report is built
-                // — recorded correctly anyway so the map stays truthful if
-                // the report is ever surfaced on failure (r17 ADVICE).
-                if (!done) action = "aborted"
-                outcomes.put(chunk,
-                  ChunkOutcome(chunk, None, action, (System.nanoTime() - t0) / 1e9, cfg.chunkSize))
-              }
-            }
-            locally {
-              // Completion callbacks run inline, not on `pool`: the finally
-              // below shuts it down while queued futures still complete.
-              implicit val ec: scala.concurrent.ExecutionContext = scala.concurrent.ExecutionContext.parasitic
-              scala.concurrent.Future.sequence(futures).foreach(_ => outcome.trySuccess(()))
-            }
-            scala.concurrent.Await.result(outcome.future, scala.concurrent.duration.Duration.Inf)
-          } finally {
-            // On the poison path Await throws while sibling chunks are
-            // still mid-commit; their commits are the durable journaled
-            // work the resume builds on, so WAIT for them before the outer
-            // finally closes their connections out from under them.
-            pool.shutdown()
-            pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES)
-          }
-          ExecutionReport(
-            planned.flatMap(c => Option(outcomes.get(c))),
-            finishedRange = true,
-            finalMinId = Some(mx + 1),
-            maxIdSeen = Some(mx))
+          ExecutionReport(outcomes, finishedRange = true, finalMinId = Some(mx + 1), maxIdSeen = Some(mx))
       }
     } finally {
-      opened.forEach(c => try c.close() catch { case _: Throwable => () })
+      opened.forEach(t => try t.close() catch { case _: Throwable => () })
       probeConn.close()
     }
   }

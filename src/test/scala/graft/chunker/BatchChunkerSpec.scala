@@ -292,6 +292,39 @@ class BatchChunkerSpec extends AnyFunSuite {
     assert(!err.contains("RejectedExecutionException"), err)
   }
 
+  test("a failed parallel run throws only after its in-flight chunks finish") {
+    val table = (1L to 40L).toDF("id")
+    val bc = new BatchChunker(table, "id",
+      cfg0.copy(chunkSize = 10, minChunkPercent = 0, retryAttempts = 1), enableCountProbe = false)
+    bc.calculateRanges()
+    val running = new java.util.concurrent.atomic.AtomicInteger()
+    val siblingStarted = new java.util.concurrent.CountDownLatch(1)
+    intercept[RuntimeException] {
+      bc.foreachChunkPar(parallelism = 2) { (chunk, _) =>
+        running.incrementAndGet()
+        try {
+          if (chunk.start == BigInt(1)) {
+            assert(siblingStarted.await(10, java.util.concurrent.TimeUnit.SECONDS))
+            throw new RuntimeException("poisoned chunk")
+          }
+          siblingStarted.countDown()
+          Thread.sleep(300)
+        } finally running.decrementAndGet()
+      }
+    }
+    assert(running.get() == 0, "the call threw while a chunk action was still running")
+  }
+
+  test("planning passes and the fixed-size parallel plan never sleep") {
+    val clock = new ManualClock
+    val bc = new BatchChunker((1L to 100L).toDF("id"), "id",
+      cfg0.copy(chunkSize = 10, minChunkPercent = 0, sleep = 0.5), clock = clock, enableCountProbe = false)
+    bc.calculateRanges()
+    assert(bc.planChunks().processed.size == 10)
+    assert(bc.foreachChunkPar(parallelism = 2)((_, _) => ()).size == 10)
+    assert(clock.now() == 0.0, s"planning slept ${clock.now()} s")
+  }
+
   test("planning passes persist no resume point: planChunks and a poisoned foreachChunkPar") {
     val stateDir = java.nio.file.Files.createTempDirectory("plan-nostate").toString
     val table = (1L to 100L).toDF("id")

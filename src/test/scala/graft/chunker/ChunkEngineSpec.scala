@@ -284,6 +284,30 @@ class ChunkEngineSpec extends AnyFunSuite {
     }
   }
 
+  test("parallel dispatch: a poisoned run stops a retry in flight, and the abort is not logged as a retry") {
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val cfg = cfg0.copy(chunkSize = 10, minChunkPercent = 0, retryAttempts = 1000,
+      retryOn = _.isInstanceOf[IllegalStateException], log = logged.add(_))
+    val siblingFailed = new java.util.concurrent.CountDownLatch(1)
+    val siblingAttempts = new java.util.concurrent.atomic.AtomicInteger()
+    val boom = intercept[RuntimeException] {
+      ChunkEngine.dispatchParallel(cfg, Chunk.fixedPlan(1, 20, 10), parallelism = 2) { c =>
+        if (c.start == BigInt(1)) {
+          assert(siblingFailed.await(10, java.util.concurrent.TimeUnit.SECONDS))
+          throw new RuntimeException("terminal")
+        }
+        siblingAttempts.incrementAndGet()
+        siblingFailed.countDown()
+        Thread.sleep(20)
+        throw new IllegalStateException("transient")
+      }
+    }
+    assert(boom.getMessage == "terminal")
+    assert(siblingAttempts.get() < 1000, "the retry ran on after the run was poisoned")
+    // One retry line per failed attempt of the sibling, none for the abort.
+    assert(logged.size == siblingAttempts.get(), logged)
+  }
+
   test("sleep is honored between chunks (t/dbh.t:89-95)") {
     val clock = new ManualClock
     val ids = (BigInt(1) to BigInt(30)).toVector

@@ -135,6 +135,8 @@ object ChunkPlanProps extends Properties("ChunkPlan") {
       val range = ids.max - ids.min + 1
       val expected = (range + chunkSize - 1) / chunkSize
       Prop(rpt.processed.size == expected.toInt) :| "chunk count" &&
-        Prop(rpt.processed.init.forall(_.chunk.width == chunkSize)) :| "uniform width"
+        Prop(rpt.processed.init.forall(_.chunk.width == chunkSize)) :| "uniform width" &&
+        Prop(Chunk.fixedPlan(ids.min, ids.max, chunkSize) == rpt.processed.map(_.chunk)) :|
+          "the parallel paths' pure plan equals the engine's fixed-size walk"
     }
 }

@@ -657,6 +657,48 @@ class JdbcBatchSpec extends AnyFunSuite {
     assert(!buf.toString.contains("RejectedExecutionException"), buf.toString)
   }
 
+  test("executeChunkedDmlPar: a crash after ANY number of commits resumes exactly once (parallelism 2)") {
+    val rows = 60
+    val plan = graft.chunker.Chunk.fixedPlan(1, rows, 10)
+    for (k <- 0 to plan.size) {
+      val (tbl, journal, runId) = (s"par_every_$k", s"par_every_log_$k", s"par-every-$k")
+      val c = java.sql.DriverManager.getConnection(url)
+      try {
+        val st = c.createStatement()
+        st.executeUpdate(s"""CREATE TABLE $tbl ("id" BIGINT NOT NULL, "val" BIGINT NOT NULL)""")
+        st.executeUpdate(s"INSERT INTO $tbl VALUES " + (1 to rows).map(i => s"($i, 0)").mkString(", "))
+        st.executeUpdate(s"""CREATE INDEX ${tbl}_id ON $tbl ("id")""")
+      } finally c.close()
+      val tpl = s"""UPDATE $tbl SET "val" = "val" + 1 WHERE "id" BETWEEN {start} AND {end}"""
+      // Every chunk body after the k-th poisons the run: exactly k chunks
+      // commit, and the in-flight sibling of the poisoned one finishes first.
+      val bodies = new java.util.concurrent.atomic.AtomicInteger()
+      val crashed = scala.util.Try(JdbcBatch.executeChunkedDmlPar(url, tpl, "id", tbl, cfg(10),
+        parallelism = 2, commitLog = journal, runId = runId,
+        inTxn = (_, _) => if (bodies.getAndIncrement() >= k) throw new RuntimeException("crash")))
+      assert(crashed.isFailure == (k < plan.size), s"k=$k: $crashed")
+      val resumed = JdbcBatch.executeChunkedDmlPar(url, tpl, "id", tbl, cfg(10),
+        parallelism = 2, commitLog = journal, runId = runId)
+      assert(resumed.outcomes.map(_.chunk) == plan, s"k=$k")
+      assert(resumed.outcomes.forall(o => o.action == "processed" || o.action == "skipped-journal"), s"k=$k")
+      assert(resumed.skippedJournal.size == k, s"k=$k")
+      val back = spark.read.jdbc(url, tbl, new java.util.Properties)
+      assert(back.filter(col("val") === 1).count() == rows, s"k=$k: every row updated exactly once")
+    }
+  }
+
+  test("fixed-size plans never sleep, and readChunked needs the fixed-size configuration") {
+    seeded
+    val sleepy = cfg(100).copy(sleep = 2)
+    val t0 = System.nanoTime()
+    assert(JdbcBatch.readChunked(spark, url, "chunk_src", "id", sleepy).rdd.getNumPartitions == 5)
+    val readS = (System.nanoTime() - t0) / 1e9
+    assert(readS < 1.0, s"readChunked took $readS s to plan 5 chunks")
+    intercept[IllegalArgumentException] {
+      JdbcBatch.readChunked(spark, url, "chunk_src", "id", sleepy.copy(targetTime = 5))
+    }
+  }
+
   test("empty table: readChunked returns an empty frame without failing") {
     val empty = Seq.empty[(Long, String)].toDF("id", "name")
     empty.write.mode("overwrite").jdbc(url, "chunk_empty", new java.util.Properties)
