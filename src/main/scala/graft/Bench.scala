@@ -1,32 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default to the machine's full parallelism, NOT a fixed small number:
-    // the committed per-round quick bench used to run at local[4] while the
-    // canonical full trio ran at local[32], and the same-HEAD artifacts
-    // disagreed up to 5x on exactly the entries whose cost is many small
-    // jobs (streaming lifecycles, multi-phase pipelines) — a config skew
-    // masquerading as a regression. One default = comparable artifacts;
-    // the env var remains the explicit override.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // The generated-class cache defaults to 100 entries; a 115-query
-      // session evicts early compilations mid-run, re-paying multi-second
-      // codegen for the widest aggregates (measured: x_dedup_cc 2.1 s warm
-      // vs ~4.8 s after its simhash sketch class aged out). Any long-lived
-      // multi-query driver wants this raised; static conf, so set here.
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new org.apache.spark.sql.graftbridge.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSession.cpus
+    val spark = LocalSession.build()
     // Warm the JVM/codegen/scheduler/parquet-reader once so the first
     // measured query isn't charged for session startup.
     spark.range(1000000).selectExpr("sum(id)").collect()

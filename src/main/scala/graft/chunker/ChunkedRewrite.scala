@@ -77,8 +77,8 @@ object ChunkedRewrite {
     // The markers are the commit record, written with each chunk's commit,
     // so resuming from them is exact even when sizing diverges on restart.
     if (cfg.stateDir.isDefined && fs.exists(root)) {
-      val (committed, uncommitted) = listChunks(fs, root)
-      uncommitted.foreach { p =>
+      val (committed, unmarked, staging) = listChunks(fs, root)
+      (unmarked ++ staging).foreach { p =>
         if (!fs.delete(p, true)) throw new java.io.IOException(s"could not delete uncommitted $p")
       }
       val ends = committed.map(_.getName).collect { case ChunkName(_, end) => BigInt(end) }
@@ -109,13 +109,20 @@ object ChunkedRewrite {
   private val ChunkName = """chunk_(-?\d+)_(-?\d+)""".r
 
   /** One listing of `root`: the committed `chunk_*` directories (marker
-    * present), and the ones a crash left uncommitted — an unmarked
-    * `chunk_*` or a `.staging_chunk_*`. */
-  private def listChunks(fs: FileSystem, root: Path): (Seq[Path], Seq[Path]) = {
+    * present), the unmarked `chunk_*` ones, and the `.staging_chunk_*`
+    * ones. A crash leaves the last two uncommitted. */
+  private def listChunks(fs: FileSystem, root: Path): (Seq[Path], Seq[Path], Seq[Path]) = {
     val dirs = fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath)
     val (chunks, others) = dirs.partition(_.getName.startsWith("chunk_"))
-    val (committed, torn) = chunks.partition(p => fs.exists(new Path(p, CommitMarker)))
-    (committed, torn ++ others.filter(_.getName.startsWith(".staging_chunk_")))
+    val (committed, unmarked) = chunks.partition(p => fs.exists(new Path(p, CommitMarker)))
+    (committed, unmarked, others.filter(_.getName.startsWith(".staging_chunk_")))
+  }
+
+  private def readChunks(spark: SparkSession, outDir: String)(
+      pick: ((Seq[Path], Seq[Path], Seq[Path])) => Seq[Path]): DataFrame = {
+    val root = new Path(outDir)
+    val dirs = pick(listChunks(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root))
+    if (dirs.isEmpty) spark.emptyDataFrame else spark.read.parquet(dirs.map(_.toString): _*)
   }
 
   /** Name of the per-chunk commit marker, written strictly after every data
@@ -123,11 +130,13 @@ object ChunkedRewrite {
     * index ignores it when the chunk is read as parquet. */
   val CommitMarker = "_GRAFT_COMMITTED"
 
-  /** Read the rewritten table back as one DataFrame. Sufficient on
-    * filesystems with atomic directory rename (HDFS, local); on object
-    * stores use [[readBackCommitted]], which skips torn-rename leftovers. */
+  /** Read the rewritten table back as one DataFrame: every `chunk_*`
+    * directory, marked or not, or an empty frame when there is none.
+    * Sufficient on filesystems with atomic directory rename (HDFS, local);
+    * on object stores use [[readBackCommitted]], which skips torn-rename
+    * leftovers. */
   def readBack(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/chunk_*")
+    readChunks(spark, outDir) { case (committed, unmarked, _) => committed ++ unmarked }
 
   /** Materialize a TINY (control-plane-sized) frame as a driver-local one,
     * severing every dependency on the distributed inputs that produced it —
@@ -179,10 +188,6 @@ object ChunkedRewrite {
     * safe reader: a chunk dir abandoned halfway through a non-atomic
     * copy+delete "rename" has no marker (it is written last) and is
     * skipped. */
-  def readBackCommitted(spark: SparkSession, outDir: String): DataFrame = {
-    val root = new Path(outDir)
-    val committed = listChunks(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)._1
-    if (committed.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(committed.map(_.toString): _*)
-  }
+  def readBackCommitted(spark: SparkSession, outDir: String): DataFrame =
+    readChunks(spark, outDir)(_._1)
 }

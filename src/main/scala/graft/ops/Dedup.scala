@@ -165,8 +165,8 @@ object Dedup {
     // Width comes from spark.sql.shuffle.partitions (the session default for
     // repartition-by-column), NOT a hard-coded defaultParallelism: batch
     // sessions set it to the core count (same spread as before), while the
-    // bounded stream runners right-size it to their backlog
-    // (StreamTuning.withPartitionsFor) — a 32-way spread of a ~200-row
+    // bounded stream runners right-size it to their backlog on the run's
+    // cloned session (StreamTuning.runBounded) — a 32-way spread of a ~200-row
     // micro-batch paid 32 task deserializes of this stage's WIDE aggregate
     // (K min-expressions) per batch, measured as executorDeserializeTime
     // dominating the x_stream_dedup_* entries' task time.

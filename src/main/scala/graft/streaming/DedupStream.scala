@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Streaming face of the incremental near-dup pipeline: documents land as a
@@ -207,18 +206,8 @@ object DedupStream {
     // the reads make an empty directory a valid empty relation.
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(indexDir))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(matchesDir))
-    StreamTuning.withPartitionsFor(s, stageDir) {
-      val q = s.readStream
-        .schema(docSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stageDir)
-        .writeStream
-        .foreachBatch(incrementalBatch(indexDir, matchesDir) _)
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    StreamTuning.runBounded(s, stageDir, docSchema, s"$workDir/ckpt")(
+      _.writeStream.foreachBatch(incrementalBatch(indexDir, matchesDir) _))
     s.read.schema(matchSchema).parquet(matchesDir)
   }
 }

@@ -31,38 +31,12 @@ object EventStream {
   def readEventStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema(eventSchema).parquet(dir)
 
-  /** Bounded-run teardown for the STATEFUL runners below: wait for the
-    * `Trigger.AvailableNow` query to finish, then release the state-store
-    * residue it leaves behind. A finished stateful query keeps its
-    * per-(operator, partition) state providers LOADED in the JVM-global
-    * registry — recent version maps on heap, visited by the periodic
-    * maintenance thread — until coordinator-driven maintenance notices the
-    * deactivation. In a long-lived driver running bounded streams between
-    * batch work that residue is a measured 2-3x tax on later queries
-    * (r18 sf5 ablation: eight finished parity runs inflated x_ann_beam
-    * 17.9 s → 49.0 s; unloading recovered it to its cold-IO band — SURVEY
-    * §8.5). Unloading is always safe: a provider re-loads from its
-    * checkpoint on next use. The stateLESS foreachBatch runners
-    * (DedupStream/SemanticStream/SketchStream) never load providers, so
-    * they have nothing to release. */
-  private def drain(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    q.awaitTermination()
-    org.apache.spark.sql.graftbridge.StreamStateResidue.unloadAll()
-  }
-
   /** Hourly tumbling-window counts/sums with a 2h watermark: late events
     * within the watermark update their window, older ones are dropped —
     * bounded state however long the stream runs. Works identically on a
     * batch DataFrame (then the watermark is a no-op). */
   def hourlyAgg(events: DataFrame): DataFrame =
-    hourlyAggBody(events.withWatermark("ts", "2 hours"))
-
-  /** The aggregation body alone — split out so the file-stream runner can
-    * put its sentinel filter BETWEEN the watermark and the aggregation
-    * (sentinel rows must pass the watermark node to advance it, but must
-    * not form windows of their own). */
-  private def hourlyAggBody(events: DataFrame): DataFrame =
-    events
+    events.withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(DecimalType(18, 4))).cast(DoubleType).as("total_value"))
@@ -157,9 +131,18 @@ object EventStream {
       ()
     }.start()
 
-  /** Read every committed batch back as one DataFrame (staging invisible). */
-  def readCommittedBatches(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/batch_*")
+  /** Read every committed batch back as one DataFrame (staging invisible);
+    * an empty frame when no batch has committed. The batch directories are
+    * listed and passed by name: a `batch_*` glob would be probed as a
+    * literal path for a sink log, which fails and is logged. */
+  def readCommittedBatches(spark: SparkSession, outDir: String): DataFrame = {
+    val root = new org.apache.hadoop.fs.Path(outDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val batches = fs.listStatus(root).collect {
+      case st if st.isDirectory && st.getPath.getName.startsWith("batch_") => st.getPath.toString
+    }
+    if (batches.isEmpty) spark.emptyDataFrame else spark.read.parquet(batches.toIndexedSeq: _*)
+  }
 
   final case class SessionInput(user_id: Long, ts: java.sql.Timestamp, event_type: String)
   final case class SessionState(nEvents: Long, firstTs: Long, lastTs: Long)
@@ -168,44 +151,6 @@ object EventStream {
 
   private val SessionGapMs: Long = 30 * 60 * 1000L
 
-  /** Custom per-user sessionization via flatMapGroupsWithState with
-    * EVENT-time timeouts: a session closes after 30 minutes of event-time
-    * inactivity, detected either by a later event from the same user (gap
-    * split) or by the watermark passing the session's deadline (timeout).
-    *
-    * Event time, not processing time, on purpose: results are deterministic
-    * and replayable from the log (a backfill produces identical sessions),
-    * and the engine only runs batches when data/watermark move — a
-    * processing-time timeout forces continuous empty micro-batches. State is
-    * a few longs per ACTIVE user: O(active users), not O(events).
-    *
-    * Input must carry a watermark on `ts` (see the spec for the standard
-    * `withWatermark("ts", ...)` wiring).
-    */
-  /** Run [[sessionize]] as a REAL file-stream query over the given events
-    * relation and return the closed sessions as a batch DataFrame.
-    *
-    * Staging: the events are cut into `slices` CONTIGUOUS event-time ranges
-    * (equal spans of [min ts, max ts] — a distributed projection, no global
-    * sort), one parquet file per slice, landed with strictly increasing
-    * modification times so the file source replays them oldest-first (the
-    * file source orders by mod time; relying on write-order wall-clock would
-    * make slice order — and therefore watermark-lateness — a race). Two
-    * sentinel batches follow the data: the first advances the watermark past
-    * every session's 30-minute deadline, the second is the batch in which
-    * those event-time timeouts actually fire (timeouts are evaluated against
-    * the watermark computed at the END of the previous batch). Sentinel rows
-    * use negative user_ids and are filtered from the result.
-    *
-    * Because slices are contiguous in event time, a user's events arrive
-    * across batches in nondecreasing ts order, so no row is ever late
-    * against the 1-minute watermark, and a session that times out between
-    * batches would have been split by the very gap that let the watermark
-    * pass its deadline — which is why stream output equals the batch
-    * window-function formulation EXACTLY for any slice count (spec-proven;
-    * the staging here is the test harness's stand-in for a Kafka topic or a
-    * file-drop directory — at scale only this staging changes, not the
-    * query). */
   /** Shared staging for the file-stream runners: cut `ev` (must carry
     * `user_id` and `ts`; extra columns ride along) into `slices`
     * CONTIGUOUS event-time ranges, one parquet file each, landed with
@@ -216,9 +161,10 @@ object EventStream {
     * everything; the rename loop pins deterministic names and mod times
     * (the file source orders its backlog by mod time, so batch order is
     * a property of the data, not of staging-job wall-clock).
-    * Returns (minMs, maxMs) of the data, or None when `ev` is empty. */
+    * Returns the data's latest event time (epoch ms) and the staged files'
+    * schema, or None when `ev` is empty. */
   private[streaming] def stageEventTimeSlices(s: SparkSession, ev: DataFrame, workDir: String,
-      slices: Int, sentinelOffsetsMin: (Int, Int) = (40, 80)): Option[(Long, Long)] = {
+      slices: Int, sentinelOffsetsMin: (Int, Int) = (40, 80)): Option[Staged] = {
     import s.implicits._
     val hconf = s.sparkContext.hadoopConfiguration
     val stagePath = new org.apache.hadoop.fs.Path(s"$workDir/stage")
@@ -237,9 +183,9 @@ object EventStream {
       (-2L, new java.sql.Timestamp(maxMs + sentinelOffsetsMin._2 * 60 * 1000L), "sentinel_fire", slices + 1)
     ).toDF("user_id", "ts", "event_type", "slice")
     val tmp = new org.apache.hadoop.fs.Path(s"$workDir/.stage_tmp")
-    ev.withColumn("slice", ((unix_millis(col("ts")) - minMs) * slices / span).cast("int"))
+    val staged = ev.withColumn("slice", ((unix_millis(col("ts")) - minMs) * slices / span).cast("int"))
       .unionByName(sentinels, allowMissingColumns = true)
-      .repartition(slices + 2, col("slice"))
+    staged.repartition(slices + 2, col("slice"))
       .write.mode("overwrite").partitionBy("slice").parquet(tmp.toString)
     val mtimeBase = 1600000000000L
     (0 until slices + 2).foreach { i =>
@@ -258,7 +204,20 @@ object EventStream {
       }
     }
     fs.delete(tmp, true)
-    Some((minMs, maxMs))
+    Some(Staged(maxMs, StructType(staged.schema.filterNot(_.name == "slice"))))
+  }
+
+  private[streaming] final case class Staged(maxMs: Long, schema: StructType)
+
+  /** Drain the slices staged under `workDir` through `query` as one bounded
+    * stream ([[StreamTuning.runBounded]]) into the parquet sink
+    * `workDir/sink`, and read that sink back. */
+  private def drainStaged(s: SparkSession, workDir: String, staged: Staged, sink: String)(
+      query: DataFrame => Dataset[_]): DataFrame = {
+    StreamTuning.runBounded(s, s"$workDir/stage", staged.schema, s"$workDir/ckpt") { src =>
+      query(src).writeStream.format("parquet").option("path", s"$workDir/$sink")
+    }
+    s.read.parquet(s"$workDir/$sink")
   }
 
   /** Run [[hourlyAgg]] — the watermarked tumbling-window aggregation — as
@@ -280,36 +239,13 @@ object EventStream {
   def runHourlyFileStream(s: SparkSession, eventsDf: DataFrame, workDir: String,
       slices: Int = 3): DataFrame = {
     import s.implicits._
-    val stage = s"$workDir/stage"
-    val outDir = s"$workDir/hourly"
     val ev = eventsDf.select(col("user_id"), col("ts"), col("event_type"), col("value"))
-    if (stageEventTimeSlices(s, ev, workDir, slices, sentinelOffsetsMin = (200, 260)).isEmpty) {
-      return Seq.empty[(java.sql.Timestamp, String, Long, Double)]
+    stageEventTimeSlices(s, ev, workDir, slices, sentinelOffsetsMin = (200, 260)) match {
+      case None => Seq.empty[(java.sql.Timestamp, String, Long, Double)]
         .toDF("window_start", "event_type", "n", "total_value")
+      case Some(staged) => drainStaged(s, workDir, staged, "hourly")(hourlyAgg)
+        .filter(!col("event_type").startsWith("sentinel"))
     }
-    val src = s.readStream
-      .schema(StructType(Seq(
-        StructField("user_id", LongType),
-        StructField("ts", TimestampType),
-        StructField("event_type", StringType),
-        StructField("value", DoubleType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stage)
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions",
-        StreamTuning.partitionsFor(s, s"$workDir/stage").toString)
-      val q = hourlyAggBody(src.withWatermark("ts", "2 hours"))
-        .writeStream
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      drain(q)
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    s.read.parquet(outDir).filter(!col("event_type").startsWith("sentinel"))
   }
 
   /** Run [[dedupEvents]] — watermarked exactly-once dedup of an
@@ -322,40 +258,17 @@ object EventStream {
   def runDedupFileStream(s: SparkSession, feedDf: DataFrame, workDir: String,
       slices: Int = 3): DataFrame = {
     import s.implicits._
-    val stage = s"$workDir/stage"
-    val outDir = s"$workDir/unique"
     val ev = feedDf.select(col("user_id"), col("ts"), col("event_type"),
       col("event_id"), col("value"))
-    if (stageEventTimeSlices(s, ev, workDir, slices).isEmpty) {
-      return Seq.empty[(Long, java.sql.Timestamp, String, Long, Double)]
+    stageEventTimeSlices(s, ev, workDir, slices) match {
+      case None => Seq.empty[(Long, java.sql.Timestamp, String, Long, Double)]
         .toDF("user_id", "ts", "event_type", "event_id", "value")
+      case Some(staged) => drainStaged(s, workDir, staged, "unique") { src =>
+        src.withWatermark("ts", "1 hour")
+          .filter(col("user_id") >= 0)
+          .dropDuplicatesWithinWatermark("event_id")
+      }
     }
-    val src = s.readStream
-      .schema(StructType(Seq(
-        StructField("user_id", LongType),
-        StructField("ts", TimestampType),
-        StructField("event_type", StringType),
-        StructField("event_id", LongType),
-        StructField("value", DoubleType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stage)
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions",
-        StreamTuning.partitionsFor(s, s"$workDir/stage").toString)
-      val q = src.withWatermark("ts", "1 hour")
-        .filter(col("user_id") >= 0)
-        .dropDuplicatesWithinWatermark("event_id")
-        .writeStream
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      drain(q)
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    s.read.parquet(outDir)
   }
 
   /** Run [[enrichWithDim]] — stream-static dimension enrichment — as a
@@ -368,36 +281,19 @@ object EventStream {
     * on the same rows for any slicing (the catalog entry
     * `q_stream_enrich_parity` rolls both up to the same per-type
     * aggregates and shares one DuckDB oracle). The staging sentinels carry
-    * null event_ids and are filtered on readback. */
+    * null event_ids and are filtered on readback. Like every runner here
+    * it is sized: it runs at the backlog-derived width
+    * ([[StreamTuning.partitionsFor]]), which sizes the per-batch join. */
   def runEnrichFileStream(s: SparkSession, eventsDf: DataFrame, dim: DataFrame,
       workDir: String, slices: Int = 3): DataFrame = {
     import s.implicits._
-    val stage = s"$workDir/stage"
-    val outDir = s"$workDir/enriched"
     val ev = eventsDf.select(col("user_id"), col("ts"), col("event_type"),
       col("event_id"), col("value"))
-    if (stageEventTimeSlices(s, ev, workDir, slices).isEmpty) {
-      return Seq.empty[(Long, String, Double)]
-        .toDF("event_id", "event_type", "weighted_value")
+    stageEventTimeSlices(s, ev, workDir, slices) match {
+      case None => Seq.empty[(Long, String, Double)].toDF("event_id", "event_type", "weighted_value")
+      case Some(staged) => drainStaged(s, workDir, staged, "enriched")(enrichWithDim(_, dim))
+        .filter(col("event_id").isNotNull)
     }
-    val src = s.readStream
-      .schema(StructType(Seq(
-        StructField("user_id", LongType),
-        StructField("ts", TimestampType),
-        StructField("event_type", StringType),
-        StructField("event_id", LongType),
-        StructField("value", DoubleType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stage)
-    val q = enrichWithDim(src, dim).writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .outputMode(OutputMode.Append())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
-    s.read.parquet(outDir).filter(col("event_id").isNotNull)
   }
 
   /** Run [[purchaseClickJoinStream]] — the stream-stream interval join —
@@ -428,83 +324,66 @@ object EventStream {
   def runJoinFileStream(s: SparkSession, eventsDf: DataFrame, workDir: String,
       slices: Int = 3): DataFrame = {
     import s.implicits._
-    val stage = s"$workDir/stage"
-    val outDir = s"$workDir/pairs"
     val ev = eventsDf.select(col("user_id"), col("ts"), col("event_type"), col("event_id"))
-    if (stageEventTimeSlices(s, ev, workDir, slices).isEmpty) {
-      return Seq.empty[(Long, Long, Long)].toDF("purchase_id", "click_id", "gap_ms")
+    stageEventTimeSlices(s, ev, workDir, slices) match {
+      case None => Seq.empty[(Long, Long, Long)].toDF("purchase_id", "click_id", "gap_ms")
+      case Some(staged) => drainStaged(s, workDir, staged, "pairs")(purchaseClickJoinStream)
     }
-    val src = s.readStream
-      .schema(StructType(Seq(
-        StructField("user_id", LongType),
-        StructField("ts", TimestampType),
-        StructField("event_type", StringType),
-        StructField("event_id", LongType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stage)
-    // Join state is partitioned by the shuffle-partition count locked into
-    // the checkpoint at first run — derived from the staged backlog like
-    // the sessionize runner (a stream-stream join holds FOUR state stores
-    // per partition per batch, so oversizing the count is 4x-amplified).
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions",
-        StreamTuning.partitionsFor(s, s"$workDir/stage").toString)
-      val q = purchaseClickJoinStream(src).writeStream
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      drain(q)
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    s.read.parquet(outDir)
   }
 
+  /** Run [[sessionize]] as a REAL file-stream query over the given events
+    * relation and return the closed sessions as a batch DataFrame.
+    *
+    * Staging: the events are cut into `slices` CONTIGUOUS event-time ranges
+    * (equal spans of [min ts, max ts] — a distributed projection, no global
+    * sort), one parquet file per slice, landed with strictly increasing
+    * modification times so the file source replays them oldest-first (the
+    * file source orders by mod time; relying on write-order wall-clock would
+    * make slice order — and therefore watermark-lateness — a race). Two
+    * sentinel batches follow the data: the first advances the watermark past
+    * every session's 30-minute deadline, the second is the batch in which
+    * those event-time timeouts actually fire (timeouts are evaluated against
+    * the watermark computed at the END of the previous batch). Sentinel rows
+    * use negative user_ids and are filtered from the result.
+    *
+    * Because slices are contiguous in event time, a user's events arrive
+    * across batches in nondecreasing ts order, so no row is ever late
+    * against the 1-minute watermark, and a session that times out between
+    * batches would have been split by the very gap that let the watermark
+    * pass its deadline — which is why stream output equals the batch
+    * window-function formulation EXACTLY for any slice count (spec-proven;
+    * the staging here is the test harness's stand-in for a Kafka topic or a
+    * file-drop directory — at scale only this staging changes, not the
+    * query). */
   def runSessionizeFileStream(s: SparkSession, eventsDf: DataFrame, workDir: String,
       slices: Int = 3): DataFrame = {
     import s.implicits._
-    val stage = s"$workDir/stage"
-    val outDir = s"$workDir/sessions"
-
     val ev = eventsDf.select(col("user_id"), col("ts"), col("event_type"))
-    if (stageEventTimeSlices(s, ev, workDir, slices).isEmpty) {
+    stageEventTimeSlices(s, ev, workDir, slices) match {
       // no events → no sessions, matching the batch twin on the same input
-      return Seq.empty[(Long, Long, Long, Long, Double)]
+      case None => Seq.empty[(Long, Long, Long, Long, Double)]
         .toDF("user_id", "n_events", "first_ms", "last_ms", "duration_sec")
+      case Some(staged) => drainStaged(s, workDir, staged, "sessions") { src =>
+        sessionize(src.withWatermark("ts", "1 minute").as[SessionInput])
+      }.filter(col("user_id") >= 0)
     }
-
-    val src = s.readStream
-      .schema(StructType(Seq(
-        StructField("user_id", LongType),
-        StructField("ts", TimestampType),
-        StructField("event_type", StringType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stage)
-      .withWatermark("ts", "1 minute")
-      .as[SessionInput]
-    // The stateful operator's partition count is locked into the checkpoint
-    // at first run from spark.sql.shuffle.partitions, and it cannot change
-    // later — so it is derived from the staged backlog's size BEFORE the
-    // first trigger (StreamTuning.partitionsFor: per-batch state-store
-    // commit cost is per partition, so the count must scale with data, not
-    // be a constant that is right at only one scale).
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions",
-        StreamTuning.partitionsFor(s, s"$workDir/stage").toString)
-      val q = sessionize(src).writeStream
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      drain(q)
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    s.read.parquet(outDir).filter(col("user_id") >= 0)
   }
+
+  /** Custom per-user sessionization via flatMapGroupsWithState with
+    * EVENT-time timeouts: a session closes after 30 minutes of event-time
+    * inactivity, detected either by a later event from the same user (gap
+    * split) or by the watermark passing the session's deadline (timeout).
+    *
+    * Event time, not processing time, on purpose: results are deterministic
+    * and replayable from the log (a backfill produces identical sessions),
+    * and the engine only runs batches when data/watermark move — a
+    * processing-time timeout forces continuous empty micro-batches. State is
+    * a few longs per ACTIVE user: O(active users), not O(events).
+    *
+    * Input must carry a watermark on `ts` (see the spec for the standard
+    * `withWatermark("ts", ...)` wiring).
+    */
+
 
   def sessionize(events: Dataset[SessionInput]): Dataset[SessionOutput] = {
     import events.sparkSession.implicits._
@@ -733,35 +612,14 @@ object EventStream {
   def runTransitionFileStream(s: SparkSession, eventsDf: DataFrame, workDir: String,
       slices: Int = 3, idleTtlMs: Option[Long] = None): DataFrame = {
     import s.implicits._
-    val outDir = s"$workDir/transitions"
     val ev = eventsDf.select(col("user_id"), col("ts"), col("event_type"), col("event_id"))
-    if (stageEventTimeSlices(s, ev, workDir, slices).isEmpty)
-      return Seq.empty[(Long, String, String)].toDF("user_id", "event_type", "next_type")
-    val src = s.readStream
-      .schema(StructType(Seq(
-        StructField("user_id", LongType),
-        StructField("ts", TimestampType),
-        StructField("event_type", StringType),
-        StructField("event_id", LongType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$workDir/stage")
-      .withWatermark("ts", "1 minute")
-      .as[TransInput]
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val transitions = idleTtlMs.fold(transitionStream(src))(transitionStreamTtl(src, _))
-    try {
-      s.conf.set("spark.sql.shuffle.partitions",
-        StreamTuning.partitionsFor(s, s"$workDir/stage").toString)
-      val q = transitions.writeStream
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      drain(q)
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    s.read.parquet(outDir).filter(col("user_id") >= 0)
+    stageEventTimeSlices(s, ev, workDir, slices) match {
+      case None => Seq.empty[(Long, String, String)].toDF("user_id", "event_type", "next_type")
+      case Some(staged) => drainStaged(s, workDir, staged, "transitions") { src =>
+        val events = src.withWatermark("ts", "1 minute").as[TransInput]
+        idleTtlMs.fold(transitionStream(events))(transitionStreamTtl(events, _))
+      }.filter(col("user_id") >= 0)
+    }
   }
 
   /** Run [[funnelStages]] as a file-stream query over the given events
@@ -770,39 +628,15 @@ object EventStream {
   def runFunnelFileStream(s: SparkSession, eventsDf: DataFrame, workDir: String,
       slices: Int = 3): DataFrame = {
     import s.implicits._
-    val outDir = s"$workDir/funnel"
     val ev = eventsDf.select(col("user_id"), col("ts"), col("event_type"), col("event_id"))
-    val staged = stageEventTimeSlices(s, ev, workDir, slices)
-    if (staged.isEmpty)
-      return Seq.empty[(Long, Long, Long, Long)].toDF("user_id", "t1", "t2", "t3")
-    val maxMs = staged.get._2
-    // Flush deadline: past every data event, before the +40 min sentinel's
-    // watermark — so every user times out exactly once, in the fire batch.
-    val flushAtMs = maxMs + 30 * 60 * 1000L
-
-    val src = s.readStream
-      .schema(StructType(Seq(
-        StructField("user_id", LongType),
-        StructField("ts", TimestampType),
-        StructField("event_type", StringType),
-        StructField("event_id", LongType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$workDir/stage")
-      .withWatermark("ts", "1 minute")
-      .as[FunnelInput]
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions",
-        StreamTuning.partitionsFor(s, s"$workDir/stage").toString)
-      val q = funnelStages(src, flushAtMs).writeStream
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      drain(q)
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    s.read.parquet(outDir).filter(col("user_id") >= 0)
+    stageEventTimeSlices(s, ev, workDir, slices) match {
+      case None => Seq.empty[(Long, Long, Long, Long)].toDF("user_id", "t1", "t2", "t3")
+      // Flush deadline: past every data event, before the +40 min sentinel's
+      // watermark — so every user times out exactly once, in the fire batch.
+      case Some(staged) => drainStaged(s, workDir, staged, "funnel") { src =>
+        funnelStages(src.withWatermark("ts", "1 minute").as[FunnelInput], staged.maxMs + 30 * 60 * 1000L)
+      }.filter(col("user_id") >= 0)
+    }
   }
+
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Streaming face of the incremental SEMANTIC dedup probe — the
@@ -177,18 +176,8 @@ object SemanticStream {
     val matchesDir = s"$workDir/matches"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(indexDir))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(matchesDir))
-    StreamTuning.withPartitionsFor(s, stageDir) {
-      val q = s.readStream
-        .schema(vecSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stageDir)
-        .writeStream
-        .foreachBatch(incrementalBatch(clusterOf, tau, indexDir, matchesDir) _)
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    StreamTuning.runBounded(s, stageDir, vecSchema, s"$workDir/ckpt")(
+      _.writeStream.foreachBatch(incrementalBatch(clusterOf, tau, indexDir, matchesDir) _))
     s.read.schema(matchSchema).parquet(matchesDir)
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Streaming face of the heavy-hitters pipeline: documents land as a
@@ -170,18 +169,8 @@ object SketchStream {
       cellsOf: DataFrame => DataFrame): DataFrame = {
     val stateDir = s"$workDir/cms_state"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stateDir))
-    StreamTuning.withPartitionsFor(s, stageDir) {
-      val q = s.readStream
-        .schema(docSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stageDir)
-        .writeStream
-        .foreachBatch(cmsBatch(cellsOf, stateDir) _)
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    StreamTuning.runBounded(s, stageDir, docSchema, s"$workDir/ckpt")(
+      _.writeStream.foreachBatch(cmsBatch(cellsOf, stateDir) _))
     val state = s.read.schema(cmsStateSchema).parquet(stateDir)
     val lastRow = state.agg(max(col("batch_id"))).head()
     if (lastRow.isNullAt(0))
@@ -196,18 +185,8 @@ object SketchStream {
       k: Int): (Map[String, Long], Long) = {
     val stateDir = s"$workDir/hh_state"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stateDir))
-    StreamTuning.withPartitionsFor(s, stageDir) {
-      val q = s.readStream
-        .schema(docSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stageDir)
-        .writeStream
-        .foreachBatch(sketchBatch(k, stateDir) _)
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    StreamTuning.runBounded(s, stageDir, docSchema, s"$workDir/ckpt")(
+      _.writeStream.foreachBatch(sketchBatch(k, stateDir) _))
     val state = s.read.schema(stateSchema).parquet(stateDir)
     val lastRow = state.agg(max(col("batch_id"))).head()
     // zero micro-batches (empty corpus / no staged files) → empty sketch,

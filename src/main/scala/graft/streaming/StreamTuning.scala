@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.StructType
 
-/** Shuffle-partition sizing for the BOUNDED stream runners (r18).
+/** The BOUNDED stream runner and its shuffle-partition sizing (r18).
   *
   * A stateful streaming query locks its shuffle-partition count into the
   * checkpoint at the first trigger, and AQE is disabled for stateful
@@ -22,6 +24,14 @@ import org.apache.spark.sql.SparkSession
   * (sized to the sandbox; a cluster deployment raises the cap with its
   * executor count — the knob a production caller sets is still ONE number,
   * but it now scales with data instead of being right only at one scale).
+  *
+  * The width lives on a per-run clone of the caller's session
+  * ([[runBounded]]), never on the caller's session itself: a query that
+  * another thread plans on the caller's session during a run keeps the
+  * caller's width. Streams need a session-conf route at all because the
+  * width locks into the checkpoint before the first trigger — there is no
+  * per-plan repartition seam — unlike batch paths, which thread widths
+  * through explicit repartition calls.
   */
 object StreamTuning {
   /** Partition count for a bounded run whose backlog was staged under
@@ -41,28 +51,40 @@ object StreamTuning {
     math.max(2, math.min(200, n))
   }
 
-  /** Run `body` (a bounded stream: start + awaitTermination) with the
-    * session's shuffle partitions derived from the staged backlog, restoring
-    * the previous value after. Also right-sizes the stateLESS foreachBatch
-    * runners: their per-micro-batch jobs (signature aggregates, probe
-    * joins, sketch folds) inherit the session width — 32 reduce tasks per
-    * tiny batch job, ~0.3 s each across the 30-50 jobs of a lifecycle
-    * entry, was pure scheduling overhead.
+  /** Drain the parquet files staged under `stageDir` as one bounded stream:
+    * clone `s`, size the clone's shuffle width with [[partitionsFor]], read
+    * the stage on the clone one file per micro-batch, let `query` turn that
+    * source into a sink, then run it with `Trigger.AvailableNow` to the end
+    * of the backlog.
     *
-    * Concurrency contract (r19, r18 ADVICE): the bracket mutates the
-    * SESSION-global shuffle width, so it assumes a SINGLE-THREADED session
-    * — a concurrent batch query planned on the same session inside the
-    * bracket would silently inherit the narrowed width. That assumption
-    * holds for every caller here (the bench/verify harnesses run entries
-    * sequentially). It is NOT an issue for the stream itself or for other
-    * sessions: the streaming engine captures the conf at query start, and
-    * the conf is per-session. Streams genuinely need the session-conf
-    * route (the width locks into the checkpoint before the first trigger
-    * — there is no per-plan repartition seam), unlike batch paths, which
-    * now thread widths through explicit repartition calls. */
-  def withPartitionsFor[T](s: SparkSession, stageDir: String)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", partitionsFor(s, stageDir).toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    * The width reaches everything the run plans: the stream's own session
+    * is cloned from the source's session at start (and its width recorded
+    * in the checkpoint), and `foreachBatch` bodies plan on
+    * `batch.sparkSession`. The stateLESS runners need it too — their
+    * per-micro-batch jobs (signature aggregates, probe joins, sketch folds)
+    * at the caller's 32-way width cost ~0.3 s of scheduling each across the
+    * 30-50 jobs of a lifecycle entry.
+    *
+    * A query that ran stateful operators leaves its per-(operator,
+    * partition) state providers LOADED in the JVM-global registry — recent
+    * version maps on heap, visited by the periodic maintenance thread —
+    * until coordinator-driven maintenance notices the deactivation. In a
+    * long-lived driver running bounded streams between batch work that
+    * residue is a measured 2-3x tax on later queries (r18 sf5 ablation:
+    * eight finished parity runs inflated x_ann_beam 17.9 s → 49.0 s;
+    * unloading recovered it to its cold-IO band — SURVEY §8.5), so such a
+    * run unloads them. Unloading is always safe: a provider re-loads from
+    * its checkpoint on next use. */
+  private[streaming] def runBounded(s: SparkSession, stageDir: String, schema: StructType,
+      checkpoint: String)(query: DataFrame => DataStreamWriter[_]): Unit = {
+    val run = org.apache.spark.sql.graftbridge.cloneSession(s)
+    run.conf.set("spark.sql.shuffle.partitions", partitionsFor(s, stageDir).toLong)
+    val q = query(run.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stageDir))
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    if (q.recentProgress.exists(_.stateOperators.nonEmpty))
+      org.apache.spark.sql.graftbridge.StreamStateResidue.unloadAll()
   }
 }

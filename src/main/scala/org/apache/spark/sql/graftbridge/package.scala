@@ -14,6 +14,10 @@ import org.apache.spark.sql.graftbridge.DotProduct
   */
 package object graftbridge {
 
+  /** A child of `s` that starts with its runtime conf, temp views, UDFs and
+    * session extensions; conf written on the child never reaches `s`. */
+  def cloneSession(s: SparkSession): SparkSession = s.asInstanceOf[classic.SparkSession].cloneSession()
+
   /** Codegen'd dot product of two array<double> columns (see
     * [[graftbridge.DotProduct]]). */
   def dotProduct(a: Column, b: Column): Column =

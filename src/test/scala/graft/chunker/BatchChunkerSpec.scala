@@ -315,6 +315,64 @@ class BatchChunkerSpec extends AnyFunSuite {
     assert(running.get() == 0, "the call threw while a chunk action was still running")
   }
 
+  test("foreachChunkPar: a crash at ANY chunk drains the running chunks, starts none, and a marker-skipping rerun writes every id once") {
+    import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import scala.jdk.CollectionConverters._
+    val table = (1L to 80L).toDF("id")
+    def chunker() = {
+      val bc = new BatchChunker(table, "id",
+        cfg0.copy(chunkSize = 10, minChunkPercent = 0, retryAttempts = 1), enableCountProbe = false)
+      bc.calculateRanges()
+      bc
+    }
+    val plan = Chunk.fixedPlan(1, 80, 10)
+    assert(plan.size == 8)
+    for ((poisoned, k) <- plan.zipWithIndex) {
+      // Staged-rename commit: a chunk's rows become visible together with its
+      // marker, and a chunk that crashes before its rename leaves neither.
+      val markers = ConcurrentHashMap.newKeySet[Chunk]()
+      val written = new ConcurrentLinkedQueue[Long]()
+      def commit(c: Chunk, df: org.apache.spark.sql.DataFrame): Unit = {
+        val staged = df.select("id").as[Long].collect()
+        markers.synchronized { staged.foreach(written.add); markers.add(c) }
+      }
+      val seq = new AtomicInteger()
+      val starts = new ConcurrentLinkedQueue[(Int, Chunk)]()
+      val poisonedAt = new AtomicInteger(Int.MaxValue)
+      val poisonThrown = new CountDownLatch(1)
+      val running = new AtomicInteger()
+      val e = intercept[RuntimeException] {
+        chunker().foreachChunkPar(parallelism = 2) { (c, df) =>
+          val me = seq.getAndIncrement()
+          starts.add(me -> c)
+          running.incrementAndGet()
+          try {
+            if (c == poisoned) {
+              // Throw once the other worker is inside a chunk started after
+              // this one (or when none comes), so a sibling is mid-body.
+              val deadline = System.nanoTime() + 300000000L
+              while (!starts.asScala.exists(_._1 > me) && System.nanoTime() < deadline) Thread.sleep(1)
+              poisonedAt.set(seq.getAndIncrement())
+              poisonThrown.countDown()
+              throw new RuntimeException(s"poisoned chunk $k")
+            }
+            // A chunk that is running when the poison lands outlives it.
+            if (poisonThrown.await(100, TimeUnit.MILLISECONDS)) Thread.sleep(50)
+            commit(c, df)
+          } finally running.decrementAndGet()
+        }
+      }
+      assert(e.getMessage == s"poisoned chunk $k")
+      assert(running.get() == 0, s"k=$k: the call threw while a chunk body was still running")
+      val late = starts.asScala.filter(_._1 > poisonedAt.get).map(_._2)
+      assert(late.isEmpty, s"k=$k: chunk bodies started after the poison: $late")
+      assert(!markers.contains(poisoned))
+      chunker().foreachChunkPar(parallelism = 2) { (c, df) => if (!markers.contains(c)) commit(c, df) }
+      assert(written.asScala.toSeq.sorted == (1L to 80L), s"k=$k: ids not written exactly once")
+    }
+  }
+
   test("planning passes and the fixed-size parallel plan never sleep") {
     val clock = new ManualClock
     val bc = new BatchChunker((1L to 100L).toDF("id"), "id",

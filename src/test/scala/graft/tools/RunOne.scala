@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness: run a comma-separated subset of SparkEntry.queries against a
   * data dir and dump result parquet + oracle SQL for /tmp/oracle_check.py —
   * the single-query inner loop for iterating on catalog entries without a
@@ -14,15 +12,7 @@ object RunOne {
     val names = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val outDir = if (args.length > 2) args(2) else "/tmp/vq"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new org.apache.spark.sql.graftbridge.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession.build()
     new java.io.File(outDir).mkdirs()
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
