@@ -80,6 +80,12 @@ final class BatchChunker(
     * decimal cast (collation order would be wrong, the caveat the reference
     * documents at lib/DBIx/BatchChunker.pm:1756-1770) — pushdown is lost, so
     * prefer numeric id columns at scale.
+    *
+    * The bounds are typed literals because the scan's pushdown reads them.
+    * Spark's generated code inlines integral literals (decimal ones it reads
+    * through a reference), so a chunk with new bounds compiles new classes;
+    * the benchmark replays identical bounds each repetition, so it cannot
+    * yet show what reading them through a reference would save.
     */
   def betweenFilter(start: BigInt, end: BigInt): Column = idField.dataType match {
     case StringType =>

@@ -302,10 +302,9 @@ object SinkRetention {
     * partitions strictly above the watermark. This is the READ SEAM every
     * probe of a manifest-managed sink must go through: plain readers skip
     * underscore-prefixed fold dirs and would silently miss the folded rows.
-    * (Spark logs a spurious "All paths were ignored" WARN when handed an
-    * underscore path explicitly — the hidden-path filter only applies to
-    * recursive listing, the read is correct; pinned by every content
-    * assertion in SinkRetentionSpec's manifest matrix.) */
+    * The fold is read through a glob of its data files, whose names are not
+    * hidden (`[^_.]*`): handed the underscore directory itself, Spark reads
+    * it correctly but logs "All paths were ignored" on every probe. */
   def readLive(s: SparkSession, dir: String, readSchema: StructType): DataFrame =
     readLiveImpl(s, dir, readSchema, None)
 
@@ -317,7 +316,7 @@ object SinkRetention {
       case None => s.read.schema(readSchema).parquet(dir)
       case Some(m) =>
         val payload = StructType(readSchema.filterNot(_.name == "batch_id"))
-        val folded = s.read.schema(payload).parquet(new Path(root, m.foldDir).toString)
+        val folded = s.read.schema(payload).parquet(new Path(new Path(root, m.foldDir), "[^_.]*").toString)
           .withColumn("batch_id", lit(m.watermark))
           .select(readSchema.fieldNames.map(col).toIndexedSeq: _*)
         s.read.schema(readSchema).parquet(dir)

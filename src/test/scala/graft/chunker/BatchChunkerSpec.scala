@@ -192,6 +192,20 @@ class BatchChunkerSpec extends AnyFunSuite {
       s"range predicate must reach the scan:\n$plan")
   }
 
+  test("the chunk scan pushes typed bounds for int and decimal ids too") {
+    for (idType <- Seq("int", "decimal(38,0)")) {
+      val dir = java.nio.file.Files.createTempDirectory("chunk-push").toString
+      (1L to 2000L).toDF("id").select(col("id").cast(idType).as("id")).write.parquet(s"$dir/t")
+      val bc = new BatchChunker(spark.read.parquet(s"$dir/t"), "id", cfg0.copy(chunkSize = 512))
+      val chunk = bc.chunkDf(Chunk(BigInt(10), BigInt(500)))
+      val plan = chunk.queryExecution.executedPlan.toString
+      assert(plan.contains("PushedFilters") &&
+        plan.contains("GreaterThanOrEqual(id,10)") && plan.contains("LessThanOrEqual(id,500)"),
+        s"$idType: range predicate must reach the scan:\n$plan")
+      assert(chunk.count() == 491, idType)
+    }
+  }
+
   test("one-many rollup chunked on the parent key conserves joined rows (t/one-many.t:29-73)") {
     // chunk the CUSTOMER keyspace; each chunk's work is a join fan-out into
     // orders (one-many) — the reference's Track->CD->Genre shape

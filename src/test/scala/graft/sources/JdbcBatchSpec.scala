@@ -687,6 +687,82 @@ class JdbcBatchSpec extends AnyFunSuite {
     }
   }
 
+  /** A fresh `(id, val = id)` table over `ids` with an index on `id`. */
+  private def bumpTable(tbl: String, ids: Seq[Long]): Unit = {
+    ids.map(i => (i, i)).toDF("id", "val").write.mode("overwrite").jdbc(url, tbl, new java.util.Properties)
+    val c = java.sql.DriverManager.getConnection(url)
+    try c.createStatement().executeUpdate(s"""CREATE INDEX ${tbl}_id ON $tbl ("id")""")
+    finally c.close()
+  }
+
+  private def bumpedOnce(tbl: String): Long =
+    spark.read.jdbc(url, tbl, new java.util.Properties).filter(col("val") === col("id") + 1000).count()
+
+  private val countingUrl = CountingDriver.Prefix + "derby:memory:graftdb"
+  private def journalProbe(j: String) =
+    s"""SELECT COUNT(*) FROM $j WHERE "run_id" = ? AND "chunk_start" = ? AND "chunk_end" = ?"""
+  private def journalInsert(j: String) = s"INSERT INTO $j VALUES (?, ?, ?)"
+
+  test("journal statements are prepared once per connection; the template runs as text once per attempt") {
+    seeded
+    import scala.jdk.CollectionConverters._
+    for (par <- Seq(false, true)) {
+      val (tbl, journal) = if (par) ("prep_par", "prep_par_log") else ("prep_seq", "prep_seq_log")
+      bumpTable(tbl, 1L to 240L)
+      val tpl = s"""UPDATE $tbl SET "val" = "val" + 1000 WHERE "id" BETWEEN {start} AND {end}"""
+      val attempts = new java.util.concurrent.atomic.AtomicInteger()
+      val failed = new java.util.concurrent.atomic.AtomicBoolean()
+      val body: (graft.chunker.Chunk, java.sql.Connection) => Unit = { (chunk, _) =>
+        attempts.incrementAndGet()
+        if (chunk.start == BigInt(51) && failed.compareAndSet(false, true)) throw new RuntimeException("retry me")
+      }
+      val c = cfg(10).copy(retryAttempts = 3)
+      CountingDriver.reset()
+      val rpt =
+        if (par) JdbcBatch.executeChunkedDmlPar(countingUrl, tpl, "id", tbl, c, parallelism = 2,
+          commitLog = journal, runId = "prep", inTxn = body)
+        else JdbcBatch.executeChunkedDml(countingUrl, tpl, "id", tbl, c, inTxn = body,
+          commitLog = Some(journal), runId = "prep")
+      val label = if (par) "executeChunkedDmlPar" else "executeChunkedDml"
+      assert(rpt.processed.size == 24 && attempts.get == 25, label)
+      val conns = CountingDriver.connections
+      for (sql <- Seq(journalProbe(journal), journalInsert(journal))) {
+        val perConn = conns.map(_.prepared.asScala.count(_ == sql)).filter(_ > 0)
+        assert(perConn.forall(_ == 1), s"$label: prepared more than once on one connection: $sql")
+        assert(perConn.size >= 1 && perConn.size <= (if (par) 2 else 1), s"$label: $perConn for $sql")
+      }
+      val texts = CountingDriver.executed
+      assert(texts.count(_.startsWith(s"UPDATE $tbl ")) == 25, s"$label: one text template per attempt")
+      // Only startup statements (journal creation, resume point, plan row)
+      // still name the journal as text; the per-chunk ones are prepared.
+      assert(texts.count(_.contains(journal)) <= 5, s"$label: ${texts.filter(_.contains(journal))}")
+      assert(bumpedOnce(tbl) == 240, label)
+    }
+  }
+
+  test("executeChunkedDml: a probe handle dropped mid-run is rebuilt and prepares its statement again") {
+    seeded
+    import scala.jdk.CollectionConverters._
+    bumpTable("prep_drop", 1L to 200L)
+    val killed = new java.util.concurrent.atomic.AtomicBoolean()
+    CountingDriver.reset()
+    val rpt = JdbcBatch.executeChunkedDml(countingUrl,
+      """UPDATE prep_drop SET "val" = "val" + 1000 WHERE "id" BETWEEN {start} AND {end}""",
+      "id", "prep_drop", cfg(10), commitLog = Some("prep_drop_log"), runId = "drop",
+      inTxn = { (chunk, _) =>
+        // The probe is the autocommit connection; the DML one is mid-transaction.
+        if (chunk.start == BigInt(101) && killed.compareAndSet(false, true))
+          CountingDriver.connections.filter(_.autoCommit).foreach(_.real.close())
+      })
+    assert(killed.get)
+    assert(rpt.processed.size == 20)
+    val probeSql = journalProbe("prep_drop_log")
+    val probes = CountingDriver.connections.filter(_.prepared.asScala.exists(_ == probeSql))
+    assert(probes.size == 2, "the rebuilt probe handle must prepare the journal probe again")
+    assert(probes.forall(_.prepared.asScala.count(_ == probeSql) == 1))
+    assert(bumpedOnce("prep_drop") == 200, "every row bumped exactly once across the dropped probe")
+  }
+
   test("fixed-size plans never sleep, and readChunked needs the fixed-size configuration") {
     seeded
     val sleepy = cfg(100).copy(sleep = 2)

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.util.Properties
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import graft.chunker.ChunkerConfig
@@ -22,21 +21,15 @@ import graft.sources.JdbcBatch
   * version rows skew later modes.
   *
   * Usage: Test/runMain graft.tools.TimeDmlPar <sfDir> [chunks] [reps]
-  * Emits one JSON line: medians + all rep times per mode.
+  * Emits one JSON line: medians + all rep times per mode. The session is
+  * [[graft.LocalSession]]'s, `SPARK_GRAFT_CPUS` wide.
   */
 object TimeDmlPar {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val chunks = if (args.length > 1) args(1).toInt else 64
     val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession.build()
     val props = new Properties
     val tpl = """UPDATE part_live SET "p_retailprice" = "p_retailprice" * 1.04 """ +
       """WHERE "p_size" <= 25 AND "p_partkey" BETWEEN {start} AND {end}"""
