@@ -10,15 +10,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   *  - DELETE = anti-filter: each chunk writes only the rows that survive;
   *  - UPDATE = column rewrite: each chunk writes its transformed rows;
-  *  - each chunk STAGES its output under a dot-prefixed scratch directory
-  *    and then RENAMES it into its range-keyed final directory — the
-  *    moral equivalent of the reference's per-chunk transaction commit
-  *    (lib/DBIx/BatchChunker.pm:1305-1327): a reader listing `chunk_*`
-  *    never observes a half-written chunk (dot-dirs are invisible to the
-  *    glob AND to Spark's file-index, which skips `.`/`_` paths), a
-  *    failed/retried chunk re-stages and re-renames idempotently, and a
-  *    crashed run resumes after its last committed chunk without
-  *    double-writing earlier chunks (see [[rewriteWithRange]]).
+  *  - each chunk WRITES its output straight into its range-keyed final
+  *    directory and then writes the [[CommitMarker]] LAST — the moral
+  *    equivalent of the reference's per-chunk transaction commit
+  *    (lib/DBIx/BatchChunker.pm:1305-1327): a chunk is committed iff its
+  *    marker exists, and every reader and resume gates on the marker, so
+  *    a reader never observes a half-written chunk; a failed/retried chunk
+  *    overwrites its own directory idempotently, and a crashed run resumes
+  *    after its last committed chunk without double-writing earlier chunks
+  *    (see [[rewriteWithRange]]). A chunk being rewritten is absent for the
+  *    length of its write, never partial.
   *
   * The semantic difference from a real transaction (readers can observe a
   * half-rewritten TABLE across chunk boundaries, never within one chunk) is
@@ -57,8 +58,10 @@ object ChunkedRewrite {
     * With `cfg.stateDir` set (the opt-in to resume), a restarted run reads
     * its resume point from `outDir` itself: it starts one id past the
     * largest end among the committed `chunk_<start>_<end>` directories,
-    * and first deletes every uncommitted `chunk_*` or `.staging_chunk_*`
-    * directory a crash left behind. Nothing is written under `stateDir`.
+    * and first deletes every unmarked `chunk_*` directory a crash left
+    * behind. Nothing is written under `stateDir`. (Dot-directories that
+    * older versions staged chunks in are not deleted; no reader reads a
+    * dot-directory.)
     * Blocks skipped as empty after the last committed chunk are probed
     * again on restart. To start over, use a fresh or emptied `outDir`. */
   def rewriteWithRange(
@@ -77,66 +80,52 @@ object ChunkedRewrite {
     // The markers are the commit record, written with each chunk's commit,
     // so resuming from them is exact even when sizing diverges on restart.
     if (cfg.stateDir.isDefined && fs.exists(root)) {
-      val (committed, unmarked, staging) = listChunks(fs, root)
-      (unmarked ++ staging).foreach { p =>
+      val (committed, unmarked) = listMarked(fs, root, "chunk_")
+      unmarked.foreach { p =>
         if (!fs.delete(p, true)) throw new java.io.IOException(s"could not delete uncommitted $p")
       }
       val ends = committed.map(_.getName).collect { case ChunkName(_, end) => BigInt(end) }
       if (ends.nonEmpty) bc.resumeAfter(ends.max)
     }
     bc.foreachChunkWithRange { (chunk, chunkDf) =>
-      val staging = new Path(root, s".staging_chunk_${chunk.start}_${chunk.end}")
-      val finalDir = new Path(root, s"chunk_${chunk.start}_${chunk.end}")
-      transform(chunk, chunkDf).write.mode("overwrite").parquet(staging.toString)
-      // Commit = swap the fully-written staging dir in. On HDFS/local the
-      // rename is atomic and the only non-atomic instant is between delete
-      // and rename, during which the chunk is ABSENT (a reader skips it),
-      // never partial. On OBJECT STORES (S3A and friends) directory rename
-      // is copy-object-by-object + delete — NOT atomic — so a crash mid-
-      // rename can leave a chunk dir with some of its files. That is why
-      // commit finishes by writing the marker file LAST: a chunk is
-      // committed iff `_GRAFT_COMMITTED` exists, and [[readBackCommitted]]
-      // gates on it. (Spark's own `_SUCCESS` can't serve: the committer
-      // writes it into STAGING, so a torn rename may copy it before the
-      // data files.)
-      if (fs.exists(finalDir)) fs.delete(finalDir, true)
-      if (!fs.rename(staging, finalDir))
-        throw new java.io.IOException(s"commit rename failed for $finalDir")
-      fs.create(new Path(finalDir, CommitMarker), true).close()
+      commit(transform(chunk, chunkDf), new Path(root, s"chunk_${chunk.start}_${chunk.end}"))
     }
   }
 
   private val ChunkName = """chunk_(-?\d+)_(-?\d+)""".r
 
-  /** One listing of `root`: the committed `chunk_*` directories (marker
-    * present), the unmarked `chunk_*` ones, and the `.staging_chunk_*`
-    * ones. A crash leaves the last two uncommitted. */
-  private def listChunks(fs: FileSystem, root: Path): (Seq[Path], Seq[Path], Seq[Path]) = {
-    val dirs = fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath)
-    val (chunks, others) = dirs.partition(_.getName.startsWith("chunk_"))
-    val (committed, unmarked) = chunks.partition(p => fs.exists(new Path(p, CommitMarker)))
-    (committed, unmarked, others.filter(_.getName.startsWith(".staging_chunk_")))
-  }
-
-  private def readChunks(spark: SparkSession, outDir: String)(
-      pick: ((Seq[Path], Seq[Path], Seq[Path])) => Seq[Path]): DataFrame = {
-    val root = new Path(outDir)
-    val dirs = pick(listChunks(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root))
-    if (dirs.isEmpty) spark.emptyDataFrame else spark.read.parquet(dirs.map(_.toString): _*)
-  }
-
-  /** Name of the per-chunk commit marker, written strictly after every data
-    * file of the chunk is in place. Underscore-prefixed, so Spark's file
-    * index ignores it when the chunk is read as parquet. */
+  /** Name of the per-directory commit marker, written strictly after every
+    * data file of the directory is in place. Underscore-prefixed, so
+    * Spark's file index ignores it when the directory is read as parquet. */
   val CommitMarker = "_GRAFT_COMMITTED"
 
-  /** Read the rewritten table back as one DataFrame: every `chunk_*`
-    * directory, marked or not, or an empty frame when there is none.
-    * Sufficient on filesystems with atomic directory rename (HDFS, local);
-    * on object stores use [[readBackCommitted]], which skips torn-rename
-    * leftovers. */
-  def readBack(spark: SparkSession, outDir: String): DataFrame =
-    readChunks(spark, outDir) { case (committed, unmarked, _) => committed ++ unmarked }
+  /** Commit `df` as the directory `dir`: overwrite `dir` with the frame's
+    * parquet, then create [[CommitMarker]] in it. The overwrite first
+    * deletes any earlier marker with the old contents, so until the new
+    * marker lands `dir` is unmarked and every reader skips it. (Spark's
+    * own `_SUCCESS` cannot serve: whether it is written depends on the
+    * session's commit protocol and Hadoop conf.) */
+  private[graft] def commit(df: DataFrame, dir: Path): Unit = {
+    df.write.mode("overwrite").parquet(dir.toString)
+    dir.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+      .create(new Path(dir, CommitMarker), true).close()
+  }
+
+  /** One listing of `root`: its `<prefix>*` directories, split into the
+    * committed ones (marker present) and the unmarked ones — a directory
+    * still being written, or one a crash left behind. */
+  private def listMarked(fs: FileSystem, root: Path, prefix: String): (Seq[Path], Seq[Path]) =
+    fs.listStatus(root).toSeq
+      .collect { case st if st.isDirectory && st.getPath.getName.startsWith(prefix) => st.getPath }
+      .partition(p => fs.exists(new Path(p, CommitMarker)))
+
+  /** Read the committed `<prefix>*` directories under `outDir` as one
+    * DataFrame, or an empty frame when there is none. */
+  private[graft] def readMarked(spark: SparkSession, outDir: String, prefix: String): DataFrame = {
+    val root = new Path(outDir)
+    val (dirs, _) = listMarked(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root, prefix)
+    if (dirs.isEmpty) spark.emptyDataFrame else spark.read.parquet(dirs.map(_.toString): _*)
+  }
 
   /** Materialize a TINY (control-plane-sized) frame as a driver-local one,
     * severing every dependency on the distributed inputs that produced it —
@@ -184,10 +173,10 @@ object ChunkedRewrite {
     try pinLocal(audit(readBackCommitted(spark, outDir)))
     finally deleteQuietly(spark, outDir)
 
-  /** Read back ONLY chunks whose commit marker exists — the object-store-
-    * safe reader: a chunk dir abandoned halfway through a non-atomic
-    * copy+delete "rename" has no marker (it is written last) and is
-    * skipped. */
+  /** Read the rewritten table back as one DataFrame — the one reader of a
+    * rewrite: only the chunks whose commit marker exists, or an empty frame
+    * when there is none. A chunk still being written, or abandoned by a
+    * crash, has no marker (it is written last) and is skipped. */
   def readBackCommitted(spark: SparkSession, outDir: String): DataFrame =
-    readChunks(spark, outDir)(_._1)
+    readMarked(spark, outDir, "chunk_")
 }

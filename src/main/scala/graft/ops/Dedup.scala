@@ -37,7 +37,7 @@ object Dedup {
 
   /** (doc_id, sh: array<string>) with tokenization materialized in a separate
     * projection so the regex runs once per document. */
-  private def shingledDocs(s: SparkSession, d: String, maxDocId: Option[Int] = None): DataFrame = {
+  private def shingledDocs(s: SparkSession, d: String, maxDocId: Option[Int]): DataFrame = {
     val base = maxDocId.foldLeft(documents(s, d))((df, m) => df.filter(col("doc_id") < m))
     base.select(col("doc_id"), tokensCol(col("text")).as("toks"))
       .select(col("doc_id"), bigramsFromTokens(col("toks")).as("sh"))

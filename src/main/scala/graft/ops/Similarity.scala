@@ -2042,7 +2042,7 @@ object Similarity {
   /** The semantic-dedup oracle at cluster count `k`: the SAME SQL text
     * modulo the Lloyd literals — both the default and the fine family are
     * replayed end-to-end. */
-  private def semanticOracleSql(k: Int, maxVecId: Option[Long] = None): String =
+  private def semanticOracleSql(k: Int, maxVecId: Option[Long]): String =
     semanticOracleSqlExpr(k.toString, "", maxVecId)
 
   /** The AUTO-k semantic oracle: instead of smuggling the trained k out of

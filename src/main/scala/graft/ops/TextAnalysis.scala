@@ -1385,7 +1385,6 @@ object TextAnalysis {
     hhExactVerify(s, d, sketch.keys.toSeq.sorted, nTotal)
   }
 
-  private val CMS_D = 4 // hash rows
   private val CMS_W = 64 // counters per row — deliberately NARROWER than the
   // bigram vocabulary (~1k) so the demo sketch genuinely collides and the
   // audit shows real overcounts; production sizes w = ceil(e/ε) instead

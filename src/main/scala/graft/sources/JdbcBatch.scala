@@ -262,7 +262,7 @@ object JdbcBatch {
     * `DBIx::Connector::Retry->run`, i.e. per-chunk BEGIN/COMMIT with
     * rollback + whole-chunk retry on failure; retry law proven by
     * t/dbh.t:283-325). This is the one place the per-chunk-transaction
-    * story is literal instead of approximated by staged renames.
+    * story is literal instead of approximated by commit markers.
     *
     * Mechanics:
     *  - range discovery + the optional COUNT probe run on a separate

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.chunker.ChunkedRewrite
 
 /** Structured Streaming surface over the events table: the same
   * transformations the batch catalog runs (CoreQueries.qEventsHourly),
@@ -109,40 +110,24 @@ object EventStream {
       .select(col("event_id"), col("event_type"),
         (col("value") * coalesce(col("weight"), lit(0.0))).as("weighted_value"))
 
-  /** Streaming sink with the same per-unit atomic commit discipline as
-    * chunker.ChunkedRewrite: each micro-batch stages under a dot-prefixed
-    * scratch directory and renames into a batchId-keyed final directory.
+  /** Streaming sink with the same per-unit commit as
+    * chunker.ChunkedRewrite: each micro-batch is written straight into a
+    * batchId-keyed directory, then its commit marker is written last.
     * Because the directory is keyed by batchId, a REPLAYED batch (failure
     * between sink write and offset commit — the at-least-once window of
-    * foreachBatch) re-stages and re-renames the same directory instead of
-    * appending duplicates: idempotence makes the sink effectively
-    * exactly-once. Readers listing `batch_*` never observe a partial
-    * batch. */
-  def stagedParquetSink(df: DataFrame, outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
+    * foreachBatch) overwrites the same directory instead of appending
+    * duplicates: idempotence makes the sink effectively exactly-once.
+    * [[readCommittedBatches]] never observes a partial batch; a batch
+    * being replayed is absent for the length of its write. */
+  def committedParquetSink(df: DataFrame, outDir: String): org.apache.spark.sql.streaming.StreamingQuery =
     df.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val hconf = batch.sparkSession.sparkContext.hadoopConfiguration
-      val staging = new org.apache.hadoop.fs.Path(s"$outDir/.staging_batch_$batchId")
-      val finalDir = new org.apache.hadoop.fs.Path(s"$outDir/batch_$batchId")
-      val fs = finalDir.getFileSystem(hconf)
-      batch.write.mode("overwrite").parquet(staging.toString)
-      if (fs.exists(finalDir)) fs.delete(finalDir, true)
-      if (!fs.rename(staging, finalDir))
-        throw new java.io.IOException(s"commit rename failed for $finalDir")
-      ()
+      ChunkedRewrite.commit(batch, new org.apache.hadoop.fs.Path(s"$outDir/batch_$batchId"))
     }.start()
 
-  /** Read every committed batch back as one DataFrame (staging invisible);
-    * an empty frame when no batch has committed. The batch directories are
-    * listed and passed by name: a `batch_*` glob would be probed as a
-    * literal path for a sink log, which fails and is logged. */
-  def readCommittedBatches(spark: SparkSession, outDir: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(outDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val batches = fs.listStatus(root).collect {
-      case st if st.isDirectory && st.getPath.getName.startsWith("batch_") => st.getPath.toString
-    }
-    if (batches.isEmpty) spark.emptyDataFrame else spark.read.parquet(batches.toIndexedSeq: _*)
-  }
+  /** Read every committed (marked) batch back as one DataFrame; an empty
+    * frame when no batch has committed. */
+  def readCommittedBatches(spark: SparkSession, outDir: String): DataFrame =
+    ChunkedRewrite.readMarked(spark, outDir, "batch_")
 
   final case class SessionInput(user_id: Long, ts: java.sql.Timestamp, event_type: String)
   final case class SessionState(nEvents: Long, firstTs: Long, lastTs: Long)

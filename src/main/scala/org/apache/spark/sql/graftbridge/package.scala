@@ -1,7 +1,6 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.graftbridge.DotProduct
 
 /** Column constructors for graft's native Catalyst expressions.
   *

@@ -2,7 +2,7 @@ package graft.chunker
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, StructField, StructType, StringType}
+import org.apache.spark.sql.types.{DecimalType, StructField, StructType}
 import org.apache.spark.sql.Row
 import graft.SparkTestSession
 import scala.collection.mutable.ArrayBuffer

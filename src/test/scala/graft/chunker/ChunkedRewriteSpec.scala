@@ -16,6 +16,21 @@ class ChunkedRewriteSpec extends AnyFunSuite {
   private def cfg0 = ChunkerConfig(chunkSize = 25, sleep = 0, targetTime = 0,
     minChunkPercent = 0, log = quiet)
 
+  /** What a kill in the middle of a chunk's write leaves: an unmarked
+    * chunk dir holding a junk part file and the committer's `_temporary/`. */
+  private def plantKilledWrite(chunkDir: String): Unit = {
+    val d = new java.io.File(chunkDir)
+    new java.io.File(d, "_temporary/0").mkdirs()
+    java.nio.file.Files.writeString(d.toPath.resolve("part-junk.parquet"), "not parquet")
+  }
+
+  /** Names under `out` a reader must never meet: unmarked `chunk_*` dirs
+    * and `.staging*` leftovers. */
+  private def uncommitted(out: String): Seq[String] =
+    new java.io.File(out).listFiles().toSeq.map(_.getName).filter(name =>
+      name.startsWith(".staging") ||
+        name.startsWith("chunk_") && !new java.io.File(s"$out/$name", ChunkedRewrite.CommitMarker).exists())
+
   test("chunked DELETE (anti-filter rewrite) equals the batch filter") {
     val dir = java.nio.file.Files.createTempDirectory("cow-del").toString
     val src = (1L to 100L).map(i => (i, i % 7)).toDF("id", "v")
@@ -23,7 +38,7 @@ class ChunkedRewriteSpec extends AnyFunSuite {
     val table = spark.read.parquet(s"$dir/src")
 
     ChunkedRewrite.rewrite(table, "id", cfg0, s"$dir/out")(_.filter(col("v") =!= 0))
-    val result = ChunkedRewrite.readBack(spark, s"$dir/out")
+    val result = ChunkedRewrite.readBackCommitted(spark, s"$dir/out")
     val expected = table.filter(col("v") =!= 0)
     assert(result.count() == expected.count())
     assert(result.select(sum(col("id"))).head().getLong(0) ==
@@ -39,7 +54,7 @@ class ChunkedRewriteSpec extends AnyFunSuite {
     ChunkedRewrite.rewrite(table, "id", cfg0, s"$dir/out") { chunk =>
       chunk.withColumn("price", when(col("id") % 2 === 0, col("price") * 2).otherwise(col("price")))
     }
-    val result = ChunkedRewrite.readBack(spark, s"$dir/out")
+    val result = ChunkedRewrite.readBackCommitted(spark, s"$dir/out")
     val expectedSum = (1L to 100L).map(i => if (i % 2 == 0) i * 2.0 else i.toDouble).sum
     assert(result.select(sum(col("price"))).head().getDouble(0) == expectedSum)
     assert(result.count() == 100)
@@ -62,7 +77,7 @@ class ChunkedRewriteSpec extends AnyFunSuite {
     }
     assert(failedOnce)
     assert(rpt.processed.size == 4)
-    val result = ChunkedRewrite.readBack(spark, s"$dir/out")
+    val result = ChunkedRewrite.readBackCommitted(spark, s"$dir/out")
     assert(result.count() == 100) // no loss, no duplication
     assert(result.select(countDistinct(col("id"))).head().getLong(0) == 100)
   }
@@ -73,9 +88,8 @@ class ChunkedRewriteSpec extends AnyFunSuite {
     src.write.mode("overwrite").parquet(s"$dir/src")
     val table = spark.read.parquet(s"$dir/src")
 
-    // Simulate a run killed mid-chunk: the third chunk's transform throws
-    // AFTER its staging write completed (the worst moment — data fully on
-    // disk but not committed).
+    // Simulate a run killed mid-chunk: the third chunk's transform throws,
+    // and the kill's on-disk state is planted below.
     val cfg = cfg0.copy(retryAttempts = 1) // a single attempt: first failure rethrows
     intercept[RuntimeException] {
       ChunkedRewrite.rewrite(table, "id", cfg, s"$dir/out") { chunk =>
@@ -85,26 +99,24 @@ class ChunkedRewriteSpec extends AnyFunSuite {
         chunk
       }
     }
-    // Plant a leftover staging dir with junk — the exact on-disk state a
-    // hard kill between staging-write and rename leaves behind.
-    val junk = new java.io.File(s"$dir/out/.staging_chunk_51_75")
-    junk.mkdirs()
-    java.nio.file.Files.writeString(junk.toPath.resolve("part-junk.parquet"), "not parquet")
+    // Plant an unmarked chunk dir with junk — the on-disk state a hard kill
+    // in the middle of the chunk's write leaves behind.
+    plantKilledWrite(s"$dir/out/chunk_51_75")
     // The reader's view after the crash: only fully-committed chunks, no
-    // partial output from the killed chunk (staging dirs are invisible).
-    val afterCrash = ChunkedRewrite.readBack(spark, s"$dir/out")
+    // partial output from the killed chunk (unmarked dirs are skipped).
+    val afterCrash = ChunkedRewrite.readBackCommitted(spark, s"$dir/out")
     val seen = afterCrash.select(col("id")).collect().map(_.getLong(0)).toSet
     assert(seen.forall(id => id <= 50), s"partial chunk leaked into reader view: ${seen.filter(_ > 50)}")
     assert(afterCrash.count() % 25 == 0, "reader observed a partially-written chunk")
 
     // Resume: re-run the rewrite (idempotent); every chunk commits.
     ChunkedRewrite.rewrite(table, "id", cfg, s"$dir/out")(chunk => chunk)
-    val resumed = ChunkedRewrite.readBack(spark, s"$dir/out")
+    val resumed = ChunkedRewrite.readBackCommitted(spark, s"$dir/out")
     assert(resumed.count() == 100)
     assert(resumed.select(countDistinct(col("id"))).head().getLong(0) == 100)
-    // no staging leftovers
-    val leftovers = new java.io.File(s"$dir/out").listFiles().map(_.getName).filter(_.startsWith(".staging"))
-    assert(leftovers.isEmpty, s"staging dirs not cleaned: ${leftovers.toSeq}")
+    // no unmarked chunk dir and no staging leftovers
+    val leftovers = uncommitted(s"$dir/out")
+    assert(leftovers.isEmpty, s"uncommitted dirs not cleaned: $leftovers")
   }
 
   test("crash mid-chunk during an UPDATE: committed chunks carry the update, resume equals the batch rewrite") {
@@ -195,14 +207,11 @@ class ChunkedRewriteSpec extends AnyFunSuite {
     val table = spark.read.parquet(s"$dir/src")
     ChunkedRewrite.rewrite(table, "id", cfg0, s"$dir/out")(chunk => chunk)
 
-    // Simulate an object-store crash mid-"rename": the chunk dir exists with
-    // readable data files (copy+delete got partway) but the marker — written
-    // strictly last — never landed.
+    // Simulate a crash mid-commit: the chunk dir exists with readable data
+    // files but the marker — written strictly last — never landed.
     (101L to 125L).toDF("id").write.parquet(s"$dir/out/chunk_101_125")
 
-    // The glob reader would happily ingest the torn chunk...
-    assert(ChunkedRewrite.readBack(spark, s"$dir/out").count() == 125)
-    // ...the committed reader skips it.
+    // The committed reader skips it.
     val committed = ChunkedRewrite.readBackCommitted(spark, s"$dir/out")
     assert(committed.count() == 100)
     assert(committed.select(max(col("id"))).head().getLong(0) == 100)
@@ -227,24 +236,24 @@ class ChunkedRewriteSpec extends AnyFunSuite {
         bump(c)
       }
     }
-    // What a kill between rename and marker leaves when the killed plan had
-    // other bounds than the restarted one, plus a half-written staging dir.
+    // What a kill between write and marker leaves when the killed plan had
+    // other bounds than the restarted one, plus a chunk killed mid-write.
     table.filter(col("id").between(41L, 60L)).transform(bump).write.parquet(s"$out/chunk_41_60")
-    new java.io.File(s"$out/.staging_chunk_41_60").mkdirs()
+    plantKilledWrite(s"$out/chunk_41_50")
     val starts = ArrayBuffer.empty[BigInt]
     ChunkedRewrite.rewriteWithRange(table, "id", cfg, out, countProbe = false) { (chunk, c) =>
       starts += chunk.start
       bump(c)
     }
     assert(starts.head == BigInt(41))
-    assert(tally(ChunkedRewrite.readBack(spark, out)) == ((80L, 80L, 80L)))
     assert(tally(ChunkedRewrite.readBackCommitted(spark, out)) == ((80L, 80L, 80L)))
     val names = new java.io.File(out).list().toSet
-    assert(!names("chunk_41_60") && !names(".staging_chunk_41_60"), s"leftovers survived: $names")
+    assert(!names("chunk_41_60") && !new java.io.File(s"$out/chunk_41_50/part-junk.parquet").exists(),
+      s"leftovers survived: $names")
   }
 
   test("exactly-once under a crash at every chunk boundary while chunkSize grows") {
-    // The staged-rename twin of JdbcBatchSpec's journal-resume test. Each
+    // The marker-commit twin of JdbcBatchSpec's journal-resume test. Each
     // restart re-plans from the reset chunkSize, so its bounds differ from
     // the grown chunks run 1 committed; resuming from anything but the
     // commit markers writes the overlap twice.
@@ -278,7 +287,7 @@ class ChunkedRewriteSpec extends AnyFunSuite {
         assert(committed.size == 10 && committed.map(_.width).distinct.sorted == Seq(3, 6).map(BigInt(_)),
           s"chunk size never grew the way the test assumes: $committed")
       } catch { case e: RuntimeException if e.getMessage == s"killed at chunk $k" => () }
-      // The rename-then-kill state: the last committed chunk lost its marker.
+      // The write-then-kill state: the last committed chunk lost its marker.
       copyTree(java.nio.file.Paths.get(s"$base/asLeft"), java.nio.file.Paths.get(s"$base/unmarked"))
       committed.lastOption.foreach { c =>
         java.nio.file.Files.delete(java.nio.file.Paths.get(
@@ -295,7 +304,7 @@ class ChunkedRewriteSpec extends AnyFunSuite {
           countProbe = false)((_, c) => bump(c))
         val label = s"crash at chunk $k, $state"
         assert(tally(ChunkedRewrite.readBackCommitted(spark, out)) == ((n, n, n)), label)
-        assert(tally(ChunkedRewrite.readBack(spark, out)) == ((n, n, n)), label)
+        assert(uncommitted(out).isEmpty, label)
       }
       k += 1
     }

@@ -15,7 +15,6 @@ import graft.SparkTestSession
   */
 class AqeSkewJoinSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
-  import spark.implicits._
 
   private def withConfs(pairs: (String, String)*)(body: => Unit): Unit = {
     val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }

@@ -49,7 +49,7 @@ class ExactSelectionSpec extends AnyFunSuite {
 
   test("empty input yields an empty frame") {
     val df = Seq.empty[(String, Double, Long)].toDF("g", "v", "id")
-    assert(ExactSelection.rankedCandidates(df, "g", "v", Seq(col("id")))(n => array(lit(1L)))
+    assert(ExactSelection.rankedCandidates(df, "g", "v", Seq(col("id")))(_ => array(lit(1L)))
       .count() == 0)
   }
 

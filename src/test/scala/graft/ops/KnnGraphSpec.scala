@@ -26,7 +26,6 @@ class KnnGraphSpec extends AnyFunSuite {
       while (i < a.length) { s += a(i) * b(i); i += 1 }; s
     }
     val nrm = vecs.map { case (id, v) => id -> math.sqrt(dot(v, v)) }.toMap
-    val vm = vecs.toMap
     val top3 = vecs.flatMap { case (a, av) =>
       vecs.filter(_._1 != a)
         .map { case (b, bv) => (b, dot(av, bv) / (nrm(a) * nrm(b))) }

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.{PlanTest, SparkTestSession}
 

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.SparkTestSession
 
 /** The occupancy-targeted SemDeDup wrapper: k follows the sizing rule

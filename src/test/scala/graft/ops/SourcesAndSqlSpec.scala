@@ -11,7 +11,6 @@ import graft.chunker.{BatchChunker, ChunkerConfig}
   */
 class SourcesAndSqlSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
-  import spark.implicits._
 
   private val quiet: String => Unit = _ => ()
   private def cfg0 = ChunkerConfig(chunkSize = 500, targetTime = 0, sleep = 0,

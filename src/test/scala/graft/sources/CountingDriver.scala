@@ -45,7 +45,7 @@ object CountingDriver {
   /** Texts of the plain statements executed, in order. */
   def executed: Seq[String] = texts.asScala.toSeq
 
-  private def proxy[T](iface: Class[T], target: T)(call: (Method, Array[AnyRef]) => AnyRef): T =
+  private def proxy[T](iface: Class[T])(call: (Method, Array[AnyRef]) => AnyRef): T =
     Proxy.newProxyInstance(getClass.getClassLoader, Array[Class[_]](iface), new InvocationHandler {
       override def invoke(p: AnyRef, m: Method, args: Array[AnyRef]): AnyRef = call(m, args)
     }).asInstanceOf[T]
@@ -57,7 +57,7 @@ object CountingDriver {
   private def open(real: Connection): Connection = {
     val c = new Conn(real)
     conns.add(c)
-    proxy(classOf[Connection], real) { (m, args) =>
+    proxy(classOf[Connection]) { (m, args) =>
       m.getName match {
         case "prepareStatement" => c.prepared.add(args(0).toString)
         case "setAutoCommit"    => c.autoCommit = args(0).asInstanceOf[Boolean]
@@ -66,7 +66,7 @@ object CountingDriver {
       val out = invoke(real, m, args)
       if (m.getName == "createStatement") {
         val st = out.asInstanceOf[Statement]
-        proxy(classOf[Statement], st) { (sm, sargs) =>
+        proxy(classOf[Statement]) { (sm, sargs) =>
           if (sm.getName.startsWith("execute") && sargs != null && sargs.nonEmpty) texts.add(sargs(0).toString)
           invoke(st, sm, sargs)
         }

@@ -314,27 +314,25 @@ class EventStreamSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("staged-sink").toString
     val input = MemoryStream[(Long, String)]
-    val q = EventStream.stagedParquetSink(input.toDF().toDF("id", "v"), dir)
+    val q = EventStream.committedParquetSink(input.toDF().toDF("id", "v"), dir)
     try {
       input.addData((1L, "a"), (2L, "b"))
       q.processAllAvailable()
       input.addData((3L, "c"))
       q.processAllAvailable()
     } finally q.stop()
-    // plant a leftover staging dir (hard-kill between stage and rename)
-    val junk = new java.io.File(s"$dir/.staging_batch_99"); junk.mkdirs()
-    java.nio.file.Files.writeString(junk.toPath.resolve("part-junk.parquet"), "not parquet")
+    // plant an unmarked batch dir (hard-kill mid-write) and a staging dir
+    // left by a sink that staged and renamed
+    for (name <- Seq("batch_99", ".staging_batch_99")) {
+      val junk = new java.io.File(s"$dir/$name"); junk.mkdirs()
+      java.nio.file.Files.writeString(junk.toPath.resolve("part-junk.parquet"), "not parquet")
+    }
     val out = EventStream.readCommittedBatches(spark, dir)
     assert(out.count() == 3)
     assert(out.select(col("id")).collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L))
-    // replayed batch: re-running batchId 0's commit path must not duplicate
+    // replayed batch: re-running batchId 0's commit must not duplicate
     val replay = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-    val staging = new org.apache.hadoop.fs.Path(s"$dir/.staging_batch_0")
-    val finalDir = new org.apache.hadoop.fs.Path(s"$dir/batch_0")
-    val fs = finalDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    replay.write.mode("overwrite").parquet(staging.toString)
-    if (fs.exists(finalDir)) fs.delete(finalDir, true)
-    assert(fs.rename(staging, finalDir))
+    graft.chunker.ChunkedRewrite.commit(replay, new org.apache.hadoop.fs.Path(s"$dir/batch_0"))
     assert(EventStream.readCommittedBatches(spark, dir).count() == 3) // still 3, no dupes
   }
 }
